@@ -36,13 +36,13 @@ def main() -> None:
             "sort, no driver collect.",
         ),
         (
-            "bm25_segment — same query through the persisted varint "
-            "segment index",
+            "bm25_segment — same query through the persisted "
+            "array-block segment index",
             api.q_bm25_segment(spark, SF),
             "Bucket partitions prune DYNAMICALLY from the broadcast "
             "query-term side (dynamicpruning subquery in the scan's "
-            "PartitionFilters); payloads decode in mapInPandas only "
-            "after pruning.",
+            "PartitionFilters); block arrays spread to postings "
+            "(inline) only after pruning.",
         ),
         (
             "wand_topk — pruned executor (block-max WAND, "
@@ -156,11 +156,11 @@ def main() -> None:
         ),
         (
             "search_verified_segment — the same lifecycle on the "
-            "persisted index (WAND coarse top-k → varint positional "
-            "verify)",
+            "persisted index (WAND coarse top-k → array-block "
+            "positional verify)",
             api.q_search_verified_segment(spark, SF),
             "WAND's block-max pruned top-k feeds the SAME semi-join "
-            "gate; positions decode from the varint payload only for "
+            "gate; positions spread from the block arrays only for "
             "query terms, then semi-join the broadcast top-k docs "
             "before the verify join.",
         ),

@@ -13,7 +13,7 @@ table of source-code files ``(repo, path, commit, lang, content)``.
 Layout
 ------
 - ``sources``    — corpus/query synthesis, catalog scan, snapshot store
-- ``functions``  — tokenizer, BM25 math, varint/delta-gap block codec
+- ``functions``  — tokenizer, BM25 math
 - ``operators``  — index build, query top-k, WAND, maintenance, dedup,
                    similarity search, text analysis, multimodal plumbing
 - ``plans``      — plan-introspection helpers (pushdown / broadcast audits)

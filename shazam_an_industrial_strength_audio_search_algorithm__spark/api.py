@@ -117,7 +117,7 @@ def docs_index(spark: SparkSession, sf_dir: str) -> InvertedIndex:
 
 def docs_segment_index(spark: SparkSession, sf_dir: str):
     """Build (once per sf_dir per process) the PERSISTED segment index
-    over ``documents`` — exposes the varint-block/bucket/snapshot path
+    over ``documents`` — exposes the array-block/bucket/snapshot path
     through the driver gate."""
 
     from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.segments import (
@@ -137,8 +137,8 @@ def docs_segment_index(spark: SparkSession, sf_dir: str):
         d = _mk_tmpdir("driver_segidx_")
         # store_positions=True: the SAME persisted index serves both
         # BM25 (bm25_segment) and positional verification
-        # (positional_segment) — positions ride in a trailing payload
-        # section the BM25 decode path skips.
+        # (positional_segment) — positions ride in their own block
+        # column, which the BM25 decode path never reads.
         # When the v1 index over the same corpus is already built (the
         # battery builds it first), its cached doc_terms feed phase A
         # directly — the identical postings without a second
@@ -796,9 +796,9 @@ def q_positional_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_positional_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same semantics through the PERSISTED path: positions decoded
-    from the varint block section (store_positions=True) and exploded
-    INSIDE the decode kernel (no array cells through Arrow) — one
+    """Same semantics through the PERSISTED path: positions read from
+    the blocks' ``positions`` arrays (store_positions=True) and
+    flattened to occurrences inside the one decode generator — one
     oracle, two physical plans, like bm25_topk/bm25_segment."""
     from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.positional import (
         positional_verify,
@@ -877,8 +877,8 @@ def q_search_verified_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     PERSISTED index — the composition that matters at 100 TB: WAND
     coarse top-k (block-max pruned, integer micro scores identical to
     brute-force BM25) → positional offset-histogram verification of
-    ONLY the surviving candidates, with positions decoded from the
-    varint block payload (``positions_for_query_terms``) and
+    ONLY the surviving candidates, with positions read from the
+    blocks' ``positions`` arrays (``positions_for_query_terms``) and
     semi-joined to the broadcast top-k doc set before the verify
     join. Same oracle as ``search_verified`` — one oracle, two
     physical plans (v1 in-memory vs WAND + segment decode)."""
@@ -952,7 +952,7 @@ JOIN rr ON t.query_id = rr.query_id AND t.doc_id = rr.doc_id AND rr.rn = 1
 
 
 def q_bm25_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The flagship query through the PERSISTED path: varint-block
+    """The flagship query through the PERSISTED path: array-block
     segment index (buckets, salting, snapshots) → decode → BM25 —
     must hash-match the same DuckDB oracle as the in-memory engine
     (Q_BM25_TOPK_SQL): one oracle, two physical plans."""
@@ -2511,7 +2511,7 @@ def _plan_union_sql(sql: str, labels: tuple[str, ...]) -> str:
 
 def q_bm25_topk_plans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """bm25_topk through BOTH brute executors — v1 in-memory and the
-    persisted varint-block segment path — as one plan-labelled union
+    persisted array-block segment path — as one plan-labelled union
     against one oracle."""
     return _plan_union([
         ("v1", q_bm25_topk(spark, sf_dir)),
@@ -2540,7 +2540,7 @@ def q_match_stats_plans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_positional_verify_plans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """positional verification from the v1 in-memory postings AND the
-    varint-block position payload, one labelled union / one oracle."""
+    array-block positions, one labelled union / one oracle."""
     return _plan_union([
         ("v1", q_positional_verify(spark, sf_dir)),
         ("segment", q_positional_segment(spark, sf_dir)),

@@ -1,1 +1,1 @@
-"""Scalar/vectorized functions: tokenizer, BM25 math, block codec."""
+"""Scalar/vectorized functions: tokenizer, BM25 math."""

@@ -1,6 +1,6 @@
-"""BM25 scoring — one formula, three dialects (Spark column, Python,
-DuckDB SQL), so engine / oracle / driver-oracle agree bit-for-bit in
-expression structure.
+"""BM25 scoring — one formula, two dialects (Spark column, Python), so
+engine and oracle agree bit-for-bit in expression structure (the
+SQL oracle in ``api.oracle_sql`` spells the same expression).
 
 Reference parity: replaces the reference's candidate score = max bin of
 a 100-bin time-offset histogram (``utils/_Shazam_.py:309-351``,
@@ -60,10 +60,3 @@ def score_col(tf_col: Column, df_col: Column, dl_col: Column,
     — stays inside whole-stage codegen, no UDF."""
     return idf_col(df_col, n_docs) * tfnorm_col(tf_col, dl_col, avgdl)
 
-
-def duckdb_score_sql(tf: str, df: str, dl: str, n_docs: str, avgdl: str) -> str:
-    """The same expression as ANSI SQL for the DuckDB driver-oracle."""
-    return (
-        f"ln(1.0 + ({n_docs} - {df} + 0.5) / ({df} + 0.5)) * "
-        f"({tf} / ({tf} + {K1} * (1.0 - {B} + {B} * {dl} / {avgdl})))"
-    )

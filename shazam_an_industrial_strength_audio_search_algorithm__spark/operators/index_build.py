@@ -266,6 +266,14 @@ class InvertedIndex:
     @classmethod
     def build(cls, corpus: DataFrame, id_col: str = "doc_id",
               text_col: str = "content", cache: bool = True) -> "InvertedIndex":
+        """Tokenize ``corpus`` into doc_terms + term_stats + (N, avgdl).
+
+        Precondition: ``id_col`` is unique per corpus row (a missing
+        ``doc_id`` is derived from the natural key by ``with_doc_id``;
+        dedupe key collisions first with ``dedup_last_wins``). With
+        ``cache=True`` the stats count distinct (doc_id, doc_len)
+        pairs over the postings, so two rows sharing an id would
+        collapse and (N, avgdl) would disagree with ``corpus_stats``."""
         from shazam_an_industrial_strength_audio_search_algorithm__spark.session import (
             spread_input,
         )

@@ -117,7 +117,8 @@ def apply_updates(
     tf[, positions], doc_len) for EXACTLY the deduped ``add_corpus``
     rows — skips the update's tokenizer pass entirely (the caller
     guarantees correspondence; used when an in-memory index over the
-    same docs already holds them).
+    same docs already holds them). It requires ``add_corpus``: the
+    overwrite detection reads the batch keys from it.
 
     ``auto_compact``: a ``CompactionPolicy`` — after this update
     commits, ``maybe_compact`` runs under it, so a continuously
@@ -127,6 +128,9 @@ def apply_updates(
     """
     if mode not in ("rebuild", "delta"):
         raise ValueError(f"mode must be 'rebuild' or 'delta', got {mode!r}")
+    if add_doc_terms is not None and add_corpus is None:
+        raise ValueError("add_doc_terms requires add_corpus (the batch "
+                         "whose postings it carries)")
     base = SegmentIndex.open(spark, index_dir)
     if mode == "rebuild" and base.has_deltas:
         raise ValueError(
@@ -530,17 +534,17 @@ def compact(
     step (``Combine.py:55-62``), Spark-first and re-tokenization-free.
 
     How the merge is expressed: each layer's blocks per (term, salt)
-    are already doc_id-sorted runs; ``merged_doc_terms`` decodes them
-    (vectorized varint), resolves tombstone supersession, and the
-    salted ``repartition(bucket, term, salt) + sortWithinPartitions``
-    in ``build_buckets_batch`` IS the k-way merge — the merged order
-    is declared and Tungsten's sort-based shuffle produces it; the
-    one-pass numpy encoder re-blocks the merged runs. Because the
-    encoder re-derives df, salts and block boundaries from the merged
-    postings, the output is **bit-identical** to a from-scratch
-    rebuild of the same logical corpus (test_compaction pins payload
-    sha equality) — but the corpus is never read, let alone
-    re-tokenized.
+    are already doc_id-sorted runs; ``merged_doc_terms`` spreads their
+    posting arrays back to rows (``inline``, JVM only) and resolves
+    tombstone supersession, and the salted
+    ``repartition(bucket, term, salt)`` + doc_id-ordered block cut in
+    ``build_buckets_batch`` IS the k-way merge — the merged order is
+    declared and Tungsten's sort-based shuffle produces it. Because
+    the encoder re-derives df, salts and block boundaries from the
+    merged postings, the output is **identical** to a from-scratch
+    rebuild of the same logical corpus (test_compaction pins every
+    array element and stat) — but the corpus is never read, let
+    alone re-tokenized; no posting crosses into Python.
 
     Only buckets any layer touches (delta postings OR tombstoned base
     docs) are merged; the rest inherit by path. Resumable per bucket

@@ -8,9 +8,10 @@ persistence + consolidation machinery:
   once, ever);
 - the single in-RAM ``LUT`` pickle (``Hashing.py:65``, loaded
   wholesale at ``Matching.py:62-67``) → posting-block parquet
-  (delta-gap+varint payloads with per-block max_tf/min_dl/max_tfnorm
-  = block-max WAND metadata), read with partition pruning + predicate
-  pushdown instead of a full RAM load;
+  (one row per block: the postings as native Parquet arrays
+  ``doc_ids``/``tfs``/``dls`` [+ ``positions``] beside per-block
+  max_tf/min_dl/max_tfnorm = block-max WAND metadata), read with
+  partition pruning + predicate pushdown instead of a full RAM load;
 - the shell split / background jobs / ``Combine.py`` merge
   (``README.md:51,58-66``, ``Combine.py:55-62``) → per-bucket build
   jobs committing atomic manifests; the combine step disappears
@@ -47,7 +48,8 @@ Scale design (the 100 TB story):
   ordered, so blocks come out globally doc_id-sorted without a
   second regroup — the salt splits the skewed group AND preserves
   merge order.
-- ``doc_len`` is inlined in the payload: scoring needs no norms join.
+- ``doc_len`` is inlined in the block (``dls``): scoring needs no norms
+  join.
 - Block bounds are stored as raw ints (max_tf, min_dl) so WAND upper
   bounds stay SAFE when later snapshots change n_docs/avgdl
   (tfnorm is increasing in tf, decreasing in dl — the bound is
@@ -61,20 +63,13 @@ import os
 import shutil
 from dataclasses import dataclass
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from shazam_an_industrial_strength_audio_search_algorithm__spark.functions.bm25 import (
-    B,
-    K1,
     idf_py,
     score_col,
-)
-from shazam_an_industrial_strength_audio_search_algorithm__spark.functions.codec import (
-    decode_block,
+    tfnorm_col,
 )
 from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.index_build import (
     with_doc_id,
@@ -122,23 +117,18 @@ def auto_block_size(n_docs: int) -> int:
     return 256 if int(n_docs) >= BIG_CORPUS_DOCS else BLOCK_SIZE
 SIGN_FLIP = -(2**63)  # XOR with the sign bit maps signed order to unsigned order
 
-BLOCK_CORE_SCHEMA = T.StructType(
-    [
-        T.StructField("bucket", T.IntegerType()),
-        T.StructField("term", T.StringType()),
-        T.StructField("salt", T.IntegerType()),
-        T.StructField("block_seq", T.IntegerType()),
-        T.StructField("doc_id_lo", T.LongType()),
-        T.StructField("doc_id_hi", T.LongType()),
-        T.StructField("n_docs", T.IntegerType()),
-        T.StructField("max_tf", T.LongType()),
-        T.StructField("min_dl", T.LongType()),
-        T.StructField("max_tfnorm", T.DoubleType()),
-        T.StructField("payload", T.BinaryType()),
-    ]
+# one block row as readers see it (``bucket`` is the partition column,
+# appended last): key (term, df, salt, block_seq), block-max WAND
+# stats, then the postings as native Parquet arrays — doc_ids
+# ascending, tfs/dls aligned with them, per-doc positions when the
+# index stores them
+BLOCK_DDL = (
+    "term string, df bigint, salt int, block_seq int, doc_id_lo bigint, "
+    "doc_id_hi bigint, n_docs int, max_tf bigint, min_dl bigint, "
+    "max_tfnorm double, doc_ids array<bigint>, tfs array<bigint>, "
+    "dls array<bigint>"
 )
-
-DT_COLS = ["term", "doc_id", "tf", "positions", "doc_len"]
+POSITIONS_DDL = "positions array<array<bigint>>"
 
 
 # ---------------------------------------------------------------------------
@@ -161,137 +151,6 @@ def resolve_buckets(spark: SparkSession, terms: list[str], n_buckets: int) -> li
         .collect()
     )
     return sorted(r["b"] for r in rows)
-
-
-def _encode_partition(avgdl: float, block_size: int,
-                      store_positions: bool = False):
-    """mapInPandas PARTITION encoder: rows arrive hash-partitioned by
-    (bucket, term, salt) and sorted within the partition by
-    (term, salt, doc_id); every posting group in the partition is
-    block-split and varint-encoded in ONE vectorized pass.
-
-    Why not applyInPandas-per-group: at bench scale the vocabulary is
-    ~25 k groups → 25 k Python callbacks + 80 k per-block
-    ``encode_block`` calls on ≤128-element arrays, where per-call
-    overhead dwarfs the work (measured ~11 s of a 17 s phase B).
-    Here block boundaries, per-block stats (reduceat) and the whole
-    value stream (scatter + one LEB128 pass + byte-slicing at block
-    boundaries) are numpy over the full partition — the same output
-    bytes, two orders of magnitude fewer Python transitions.
-
-    ``df`` joins in after (block rows are tiny compared to postings —
-    attaching df via a block-side join beats a full-row window over
-    the postings). With ``store_positions`` the per-doc occurrence
-    offsets ride in a trailing delta-varint section of each payload.
-    """
-    from shazam_an_industrial_strength_audio_search_algorithm__spark.functions.codec import (
-        varint_encode_with_ends,
-        zigzag_encode,
-    )
-
-    def fn(batches):
-        pdfs = [p for p in batches if len(p)]
-        if not pdfs:
-            return
-        pdf = pd.concat(pdfs, ignore_index=True) if len(pdfs) > 1 else pdfs[0]
-        R = len(pdf)
-        ids = pdf["doc_id"].to_numpy(np.int64)
-        tf = pdf["tf"].to_numpy(np.int64)
-        dl = pdf["doc_len"].to_numpy(np.int64)
-        salt = pdf["salt"].to_numpy(np.int64)
-        # group change where (term, salt) changes (rows are sorted)
-        term_codes, _ = pd.factorize(pdf["term"], sort=False)
-        new_group = np.empty(R, dtype=bool)
-        new_group[0] = True
-        new_group[1:] = (np.diff(term_codes) != 0) | (np.diff(salt) != 0)
-        gstart = np.flatnonzero(new_group)
-        gsize = np.diff(np.append(gstart, R))
-        # within-group ordinal → block boundaries every block_size rows
-        ordinal = np.arange(R) - np.repeat(gstart, gsize)
-        is_bstart = new_group | (ordinal % block_size == 0)
-        bstart = np.flatnonzero(is_bstart)
-        n = np.diff(np.append(bstart, R))  # rows per block
-        nB = bstart.size
-
-        # strictly-ascending doc_ids within each group (duplicate or
-        # unsorted input is a build bug — fail loudly, like encode_block)
-        not_start = ~new_group
-        if not_start.any() and not (ids[not_start] > ids[np.flatnonzero(not_start) - 1]).all():
-            raise ValueError("doc_ids must be strictly ascending per group")
-
-        # per-block stats via reduceat (contiguous blocks)
-        tfnorm = tf / (tf + K1 * (1.0 - B + B * dl.astype(np.float64) / avgdl))
-        out = {
-            "bucket": pdf["bucket"].to_numpy(np.int32)[bstart],
-            "term": pdf["term"].to_numpy()[bstart],
-            "salt": salt[bstart].astype(np.int32),
-            "block_seq": (ordinal[bstart] // block_size).astype(np.int32),
-            "doc_id_lo": ids[bstart],
-            "doc_id_hi": ids[bstart + n - 1],
-            "n_docs": n.astype(np.int32),
-            "max_tf": np.maximum.reduceat(tf, bstart),
-            "min_dl": np.minimum.reduceat(dl, bstart),
-            "max_tfnorm": np.maximum.reduceat(tfnorm, bstart),
-        }
-
-        # ---- assemble the value stream for ALL blocks at once -------
-        # per-block layout: n | zz(first) gaps... | tfs... | dls...
-        #                   [| pos-deltas (Σtf of the block)]
-        prev = np.empty(R, dtype=np.uint64)
-        u = ids.astype(np.uint64)
-        prev[1:] = u[:-1]
-        rowval = np.where(is_bstart, zigzag_encode(ids), u - prev)
-        blk_len = 1 + 3 * n
-        if store_positions:
-            flat_parts = pdf["positions"].to_numpy()
-            flat = (
-                np.concatenate([np.asarray(p, dtype=np.int64)
-                                for p in flat_parts])
-                if R else np.zeros(0, dtype=np.int64)
-            )
-            if flat.size != int(tf.sum()):
-                raise ValueError("positions length != sum(tf)")
-            npos_b = np.add.reduceat(tf, bstart)
-            blk_len = blk_len + npos_b
-        off = np.concatenate(([0], np.cumsum(blk_len)[:-1]))
-        total = int(np.cumsum(blk_len)[-1]) if nB else 0
-        vals = np.zeros(total, dtype=np.uint64)
-        vals[off] = n.astype(np.uint64)
-        off_rep = np.repeat(off, n)
-        n_rep = np.repeat(n, n)
-        j = np.arange(R) - np.repeat(bstart, n)
-        vals[off_rep + 1 + j] = rowval
-        vals[off_rep + 1 + n_rep + j] = tf.astype(np.uint64)
-        vals[off_rep + 1 + 2 * n_rep + j] = dl.astype(np.uint64)
-        if store_positions:
-            # per-row first offset absolute, then in-row deltas
-            pprev = np.empty(flat.size, dtype=np.int64)
-            pprev[1:] = flat[:-1]
-            row_pstart = np.zeros(flat.size, dtype=bool)
-            row_pstart[np.cumsum(tf) - tf] = True
-            pdeltas = np.where(row_pstart, flat, flat - pprev)
-            if (pdeltas < 0).any():
-                raise ValueError("positions must ascend within each doc")
-            # scatter target: block pos-section + within-block prefix
-            tf_cum = np.cumsum(tf) - tf  # global prefix of positions
-            blk_pos_base = off_rep + 1 + 3 * n_rep  # per ROW
-            within_blk = tf_cum - np.repeat(tf_cum[bstart], n)
-            row_target = blk_pos_base + within_blk  # per ROW start
-            pos_target = np.repeat(row_target, tf) + (
-                np.arange(flat.size) - np.repeat(tf_cum, tf)
-            )
-            vals[pos_target] = pdeltas.astype(np.uint64)
-
-        buf, ends = varint_encode_with_ends(vals)
-        blk_val_end = np.cumsum(blk_len)
-        byte_end = ends[blk_val_end - 1] if nB else np.zeros(0, np.int64)
-        byte_start = np.concatenate(([0], byte_end[:-1]))
-        out["payload"] = [
-            buf[int(s):int(e)] for s, e in zip(byte_start, byte_end)
-        ]
-        yield pd.DataFrame(out)
-
-    return fn
 
 
 def _atomic_write_json(path: str, obj: dict) -> None:
@@ -390,6 +249,65 @@ def read_snapshot(index_dir: str, version: int | None = None) -> dict:
     return snap
 
 
+def encode_blocks(postings: DataFrame, avgdl: float, block_size: int,
+                  store_positions: bool = False) -> DataFrame:
+    """Salted postings (bucket, term, salt, doc_id, tf, doc_len
+    [, positions]) → one row per block: (bucket, term, salt,
+    block_seq, doc_id_lo, doc_id_hi, n_docs, max_tf, min_dl,
+    max_tfnorm, doc_ids, tfs, dls[, positions]). Each (term, salt)
+    run is cut every ``block_size`` postings in doc_id order.
+
+    JVM only, one exchange: the hash on (bucket, term, salt) satisfies
+    the ordinal window AND the block groupBy (a superset of its keys).
+    The explicit width stops AQE from coalescing the small-bytes
+    shuffle below the core count."""
+    spark = postings.sparkSession
+    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    group = ["bucket", "term", "salt"]
+    posting = [
+        F.col("doc_id"),
+        F.col("tf").cast("long").alias("tf"),
+        F.col("doc_len").cast("long").alias("doc_len"),
+    ]
+    if store_positions:
+        posting.append(
+            F.col("positions").cast("array<bigint>").alias("positions")
+        )
+    ordinal = F.row_number().over(
+        Window.partitionBy(*group).orderBy("doc_id")
+    ) - 1
+    blocks = (
+        postings.repartition(n_part, *group)
+        .withColumn("block_seq", F.floor(ordinal / block_size).cast("int"))
+        .groupBy(*group, "block_seq")
+        .agg(
+            # sort_array orders by doc_id (the struct's first field):
+            # collect_list's input order is not a contract
+            F.sort_array(F.collect_list(F.struct(*posting))).alias("p"),
+            F.min("doc_id").alias("doc_id_lo"),
+            F.max("doc_id").alias("doc_id_hi"),
+            F.count(F.lit(1)).cast("int").alias("n_docs"),
+            F.max("tf").cast("long").alias("max_tf"),
+            F.min("doc_len").cast("long").alias("min_dl"),
+            F.max(tfnorm_col(F.col("tf"), F.col("doc_len"), avgdl))
+            .alias("max_tfnorm"),
+        )
+    )
+    doc_ids = F.col("p.doc_id")
+    arrays = [
+        # one posting per (term, doc): a repeated doc_id is a caller bug
+        F.when(F.size(F.array_distinct(doc_ids)) == F.col("n_docs"), doc_ids)
+        .otherwise(F.raise_error(F.lit("duplicate doc_id in a posting group")))
+        .alias("doc_ids"),
+        F.col("p.tf").alias("tfs"),
+        F.col("p.doc_len").alias("dls"),
+    ]
+    if store_positions:
+        arrays.append(F.col("p.positions").alias("positions"))
+    return blocks.select(*group, "block_seq", "doc_id_lo", "doc_id_hi",
+                         "n_docs", "max_tf", "min_dl", "max_tfnorm", *arrays)
+
+
 def build_buckets_batch(
     spark: SparkSession,
     index_dir: str,
@@ -410,8 +328,10 @@ def build_buckets_batch(
     Plan: (1) count-only df agg per (bucket, term) — map-side partial
     aggregation, only counts shuffle; (2) hot terms (df > hot_df,
     a tiny set by Zipf) broadcast back onto the postings to assign
-    doc-id-range salts; (3) the one heavy shuffle:
-    groupBy(bucket, term, salt) → applyInPandas block encode;
+    doc-id-range salts; (3) the one heavy shuffle, hashed on
+    (bucket, term, salt): a doc_id-ordered row_number cuts every
+    block_size postings, and groupBy(bucket, term, salt, block_seq)
+    collects each block's arrays and stats (``encode_blocks``);
     (4) df attaches to the BLOCK rows (≈ postings/block_size rows —
     far cheaper than windowing df over raw postings); (5) write
     partitionBy(bucket), overwriting only the touched partitions.
@@ -457,24 +377,13 @@ def build_buckets_batch(
         )
         .drop("salt_bits", "flipped", "hot_term_df")
     )
-    # pin the shuffle width: AQE coalesces by BYTES, but the encode
-    # stage is CPU-bound Python — letting it coalesce to a handful of
-    # partitions serializes the codec. Explicit repartition on the
-    # grouping keys satisfies the groupBy's distribution (no second
-    # shuffle) and keeps every core busy.
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    blocks = (
-        salted.repartition(n_part, "bucket", "term", "salt")
-        .sortWithinPartitions("term", "salt", "doc_id")
-        .mapInPandas(
-            _encode_partition(avgdl, block_size, store_positions),
-            schema=BLOCK_CORE_SCHEMA,
-        )
-    )
+    blocks = encode_blocks(salted, avgdl, block_size, store_positions)
+    # df joins the BLOCK rows (≈ postings / block_size of them), and
+    # the local sort keeps each bucket's row groups term-clustered for
+    # the prefix scan's row-group pruning
     out = blocks.join(term_df, ["bucket", "term"]).select(
-        "bucket", "term", "df", "salt", "block_seq", "doc_id_lo",
-        "doc_id_hi", "n_docs", "max_tf", "min_dl", "max_tfnorm", "payload",
-    )
+        "bucket", "term", "df", *blocks.columns[2:],
+    ).sortWithinPartitions("bucket", "term", "salt", "block_seq")
     # per-bucket block counts ride the write job as an Observation
     # (one count_if per bucket) instead of a read-back aggregation
     # over the just-written parquet — a whole job per batch. Gated on
@@ -631,6 +540,9 @@ def build_segment_index(
     """
     import time as _time
 
+    if corpus is None and doc_terms_df is None:
+        raise ValueError("build_segment_index needs a corpus or a "
+                         "doc_terms_df")
     timings: dict[str, float] = {}
     if resume:
         gen = _resumable_build_gen(index_dir)
@@ -893,79 +805,6 @@ def build_segment_index(
 # ---------------------------------------------------------------------------
 # reader + query
 # ---------------------------------------------------------------------------
-DECODED_SCHEMA = T.StructType(
-    [
-        T.StructField("term", T.StringType()),
-        T.StructField("df", T.LongType()),
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("tf", T.LongType()),
-        T.StructField("doc_len", T.LongType()),
-    ]
-)
-
-DECODED_SCHEMA_POS = T.StructType(
-    DECODED_SCHEMA.fields
-    + [T.StructField("positions", T.ArrayType(T.LongType()))]
-)
-
-
-def _decode_partition(it, with_positions: bool = False,
-                      passthrough: tuple[str, ...] = (),
-                      explode_positions: bool = False):
-    """Vectorized block → posting-rows decode. ``passthrough`` names
-    per-block scalar columns (e.g. ``bucket``, ``gen_seq``) repeated
-    onto every decoded row — the layered reader and compaction need
-    them to resolve tombstones and regroup.
-
-    ``explode_positions`` emits one row per OCCURRENCE with a flat
-    ``pos`` long column (pure np.repeat — no per-row object arrays):
-    positional queries explode anyway, and shipping array cells
-    through Arrow costs ~5× the whole downstream aggregation
-    (measured: positional_segment 10.1 s → see bench). ``df`` is
-    dropped in this mode (a per-occurrence df column invites wrong
-    aggregation; positional verification never needs it)."""
-    cols = ["term", "df", "doc_id", "tf", "doc_len"]
-    for pdf in it:
-        outs = []
-        extras = [pdf[c] for c in passthrough]
-        for term, df, payload, *extra in zip(
-            pdf["term"], pdf["df"], pdf["payload"], *extras
-        ):
-            if explode_positions:
-                ids, tfs, dls, flat = decode_block(bytes(payload), True)
-                d = {
-                    "term": term,
-                    "doc_id": np.repeat(ids, tfs),
-                    "tf": np.repeat(tfs, tfs),
-                    "doc_len": np.repeat(dls, tfs),
-                    "pos": flat,
-                }
-            elif with_positions:
-                ids, tfs, dls, flat = decode_block(bytes(payload), True)
-                pos = np.split(flat, np.cumsum(tfs)[:-1])
-                d = {"term": term, "df": int(df), "doc_id": ids,
-                     "tf": tfs, "doc_len": dls, "positions": pos}
-            else:
-                ids, tfs, dls = decode_block(bytes(payload))
-                d = {"term": term, "df": int(df), "doc_id": ids,
-                     "tf": tfs, "doc_len": dls}
-            for name, val in zip(passthrough, extra):
-                d[name] = val
-            outs.append(pd.DataFrame(d))
-        if outs:
-            yield pd.concat(outs, ignore_index=True)
-        else:
-            base = ["term", "doc_id", "tf", "doc_len", "pos"] \
-                if explode_positions else cols
-            d = {c: pd.Series(dtype="int64" if c != "term" else "object")
-                 for c in base}
-            if with_positions and not explode_positions:
-                d["positions"] = pd.Series(dtype="object")
-            for name in passthrough:
-                d[name] = pd.Series(dtype="int64")
-            yield pd.DataFrame(d)
-
-
 @dataclass
 class SegmentIndex:
     """Reader over a committed snapshot of the index."""
@@ -1013,28 +852,14 @@ class SegmentIndex:
         return bool(self.layers)
 
     def _empty(self, kind: str) -> DataFrame:
+        pos = self.snapshot.get("store_positions", False)
         if kind == "segments":
-            schema = T.StructType(
-                [T.StructField("df", T.LongType())]
-                + [f for f in BLOCK_CORE_SCHEMA.fields if f.name != "bucket"]
-                + [T.StructField("bucket", T.IntegerType())]
-            )
+            cols = [BLOCK_DDL] + ([POSITIONS_DDL] if pos else [])
         else:
-            fields = [
-                T.StructField("term", T.StringType()),
-                T.StructField("doc_id", T.LongType()),
-                T.StructField("tf", T.IntegerType()),
-            ]
-            if self.snapshot.get("store_positions", False):
-                fields.append(
-                    T.StructField("positions", T.ArrayType(T.IntegerType()))
-                )
-            fields += [
-                T.StructField("doc_len", T.IntegerType()),
-                T.StructField("bucket", T.IntegerType()),
-            ]
-            schema = T.StructType(fields)
-        return self.spark.createDataFrame([], schema)
+            cols = (["term string, doc_id bigint, tf int"]
+                    + (["positions array<int>"] if pos else [])
+                    + ["doc_len int"])
+        return self.spark.createDataFrame([], ", ".join(cols + ["bucket int"]))
 
     def _scan_map(self, kind: str, bmap: dict,
                   buckets: list[int] | None,
@@ -1226,50 +1051,40 @@ class SegmentIndex:
                 with_positions: bool = False,
                 passthrough: tuple[str, ...] = (),
                 explode_positions: bool = False) -> DataFrame:
-        # spread the decode: compressed blocks are few MB (file-packing
-        # would scan them in 1-2 partitions) but varint decode is
-        # CPU-bound — a cheap round-robin repartition parallelizes it
+        """Block rows → posting rows (term, df, doc_id, tf, doc_len
+        [, positions]) in the JVM: one ``inline(arrays_zip(...))``.
+        ``passthrough`` names per-block columns (``bucket``,
+        ``gen_seq``) repeated onto every posting — the layered reader
+        and compaction need them to resolve tombstones and regroup.
+
+        ``explode_positions`` emits one row per OCCURRENCE with a flat
+        ``pos`` long column instead (no df: a per-occurrence df invites
+        wrong aggregation, and positional verification never needs
+        it). The block's postings flatten to occurrences inside the
+        same single generator, so no per-posting positions array is
+        ever materialized as a row."""
         if with_positions and not self.snapshot.get("store_positions", False):
             raise ValueError(
                 "index was built with store_positions=False — "
                 "positions are not in the blocks"
             )
-        passthrough = tuple(
+        keep = ["term"] + ([] if explode_positions else ["df"]) + [
             c for c in passthrough if c in blocks.columns
-        )
+        ]
         if explode_positions:
-            fields = [
-                T.StructField("term", T.StringType()),
-                T.StructField("doc_id", T.LongType()),
-                T.StructField("tf", T.LongType()),
-                T.StructField("doc_len", T.LongType()),
-                T.StructField("pos", T.LongType()),
-            ]
-        else:
-            fields = list(
-                (DECODED_SCHEMA_POS if with_positions
-                 else DECODED_SCHEMA).fields
-            )
-        for c in passthrough:
-            fields.append(T.StructField(
-                c, T.IntegerType() if c in ("bucket", "gen_seq")
-                else T.LongType()
+            occurrences = F.flatten(F.transform(
+                F.arrays_zip("doc_ids", "tfs", "dls", "positions"),
+                lambda p: F.transform(p["positions"], lambda o: F.struct(
+                    p["doc_ids"].alias("doc_id"), p["tfs"].alias("tf"),
+                    p["dls"].alias("doc_len"), o.alias("pos"),
+                )),
             ))
-        n_part = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
-        # hash-spread on the block identity, NOT keyless round-robin:
-        # repartition(n) pays a local sort of every input partition
-        # (sortBeforeRepartition, needed to make round-robin
-        # deterministic under task retry) and that sort moves the
-        # compressed payload bytes; hashing (term, salt, block_seq) is
-        # deterministic by construction — same spread, no sort
-        # (guide §2.5 deterministic-keys rule)
-        return blocks.repartition(
-            n_part, F.xxhash64("term", "salt", "block_seq")
-        ).mapInPandas(
-            lambda it: _decode_partition(it, with_positions, passthrough,
-                                         explode_positions),
-            schema=T.StructType(fields),
-        )
+            return blocks.select(*keep, F.inline(occurrences))
+        arrays = [F.col("doc_ids").alias("doc_id"), F.col("tfs").alias("tf"),
+                  F.col("dls").alias("doc_len")]
+        if with_positions:
+            arrays.append(F.col("positions"))
+        return blocks.select(*keep, F.inline(F.arrays_zip(*arrays)))
 
     def _resolve_layers(self, decoded: DataFrame,
                         recompute_df: bool = True) -> DataFrame:
@@ -1326,11 +1141,9 @@ class SegmentIndex:
 
     def positions_for_query_terms(self, qt: DataFrame) -> DataFrame:
         """Occurrence-exploded postings (term, doc_id, tf, doc_len,
-        pos) for positional queries — positions flatten to a long
-        column INSIDE the decode kernel (np.repeat), never riding
-        through Arrow as per-row arrays only for Spark to explode
-        them again (that object-array round trip dominated the
-        positional_segment wall clock). No df column by design."""
+        pos) for positional queries — the block's positions flatten
+        to a long column inside the one decode generator. No df
+        column by design."""
         out = self._spread(
             self.blocks_for_query_terms(qt),
             with_positions=True,  # store_positions guard
@@ -1383,7 +1196,7 @@ def estimate_brute_materialization(index: SegmentIndex,
     ((query_id, term) pairs): every posting of a term materializes
     once per query containing it — exactly the intermediate state the
     score shuffle spills. One metadata-only job (bucket-pruned block
-    stats; payloads never read)."""
+    stats; posting arrays never read)."""
     per_term_q = qt.groupBy("term").agg(F.count(F.lit(1)).alias("nq"))
     blocks = index.blocks_for_query_terms(qt).select("term", "n_docs")
     row = blocks.join(F.broadcast(per_term_q), "term").agg(
@@ -1423,9 +1236,10 @@ def segment_topk(
 
     Plan: query terms (tiny, broadcast — NEVER collected to the
     driver) ⋈ block scan (bucket partitions dynamically pruned from
-    the broadcast side) → ``mapInPandas`` varint decode → score
+    the broadcast side) → ``inline(arrays_zip(...))`` → score
     (doc_len inline, no norms join) → groupBy(query, doc) sum →
-    row_number ≤ k. Semantics identical to operators/topk.bm25_topk
+    row_number ≤ k (``topk.sum_scores`` / ``topk.rank_top``, the
+    spine ``bm25_topk`` shares). Semantics identical to operators/topk.bm25_topk
     (tests/test_segments.py).
 
     ``micro=True`` switches to exact integer micro-unit scoring
@@ -1446,6 +1260,8 @@ def segment_topk(
     """
     from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.topk import (
         query_terms,
+        rank_top,
+        sum_scores,
     )
 
     qt = query_terms(queries, id_col, text_col)
@@ -1465,55 +1281,13 @@ def segment_topk(
                     "scratch_check=False to force."
                 )
     postings = index.postings_for_query_terms(qt)
-    term_score = score_col(F.col("tf"), F.col("df"), F.col("doc_len"),
-                           index.n_docs, index.avgdl)
-    # ONE exchange for score-sum AND rank window (guide §2.4): hash
-    # the candidate rows by query_id alone — that distribution
-    # satisfies both groupBy(query_id, doc_id) (subset clustering) and
-    # Window.partitionBy(query_id), so the post-agg re-shuffle the
-    # default plan inserts before the window disappears. Map-side
-    # partial agg collapsed ~nothing here anyway (a (query, doc)
-    # pair's rows arrive term-major, one term per map partition).
-    candidates = postings.join(F.broadcast(qt), "term").repartition(
-        F.col("query_id")
+    scored = sum_scores(
+        postings.join(F.broadcast(qt), "term"),
+        score_col(F.col("tf"), F.col("df"), F.col("doc_len"),
+                  index.n_docs, index.avgdl),
+        micro,
     )
-    if micro:
-        contrib = F.round(term_score * F.lit(1_000_000.0)).cast("long")
-        scored = (
-            candidates
-            .withColumn("contrib_micro", contrib)
-            .groupBy("query_id", "doc_id")
-            .agg(
-                F.sum("contrib_micro").alias("score_micro"),
-                F.count(F.lit(1)).cast("long").alias("matched_terms"),
-            )
-        )
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("score_micro").desc(), F.col("doc_id").asc()
-        )
-        return (
-            scored.withColumn("rank", F.row_number().over(w).cast("long"))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "rank", "doc_id", "score_micro",
-                    "matched_terms")
-        )
-    scored = (
-        candidates
-        .withColumn("term_score", term_score)
-        .groupBy("query_id", "doc_id")
-        .agg(
-            F.sum("term_score").alias("score"),
-            F.count(F.lit(1)).alias("matched_terms"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("doc_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "doc_id", "score", "matched_terms")
-    )
+    return rank_top(scored, k, micro)
 
 
 def drop_index(index_dir: str) -> None:

@@ -24,7 +24,7 @@ top-k is ``row_number`` + filter → ``TakeOrderedAndProject``-shaped.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from shazam_an_industrial_strength_audio_search_algorithm__spark.functions.bm25 import (
@@ -51,6 +51,54 @@ def query_terms(queries: DataFrame, id_col: str = "query_id",
     )
 
 
+def sum_scores(candidates: DataFrame, term_score: Column,
+               micro: bool = False) -> DataFrame:
+    """(query_id, doc_id, score, matched_terms) from (query_id, doc_id,
+    …) candidate rows — the brute-force scoring spine every full-scan
+    path shares.
+
+    ONE exchange serves the score-sum AND every downstream per-query
+    window (guide §2.4): hash by query_id alone — that distribution
+    satisfies groupBy(query_id, doc_id) (subset clustering) and
+    Window.partitionBy(query_id), so no re-shuffle lands before the
+    rank window.
+
+    ``micro=True``: each per-term contribution rounds to an integer
+    micro-unit BEFORE the sum (the fold-order-independent convention
+    every oracle-gated path shares); the column is ``score_micro``."""
+    name = "score"
+    if micro:
+        name = "score_micro"
+        term_score = F.round(term_score * F.lit(1_000_000.0)).cast("long")
+    return (
+        candidates.repartition(F.col("query_id"))
+        .withColumn("_contrib", term_score)
+        .groupBy("query_id", "doc_id")
+        .agg(
+            F.sum("_contrib").alias(name),
+            F.count(F.lit(1)).alias("matched_terms"),
+        )
+    )
+
+
+def rank_top(scored: DataFrame, k: int, micro: bool = False) -> DataFrame:
+    """(query_id, rank, doc_id, score, matched_terms), rank 1..k with
+    the deterministic tie-break (score DESC, doc_id ASC) — SURVEY §2.5
+    W2's explicit replacement for Counter insertion order. ``micro``
+    reads ``score_micro`` and types rank as long (the oracle-gated
+    schema)."""
+    name = "score_micro" if micro else "score"
+    w = Window.partitionBy("query_id").orderBy(
+        F.col(name).desc(), F.col("doc_id").asc()
+    )
+    rank = F.row_number().over(w)
+    return (
+        scored.withColumn("rank", rank.cast("long") if micro else rank)
+        .filter(F.col("rank") <= k)
+        .select("query_id", "rank", "doc_id", name, "matched_terms")
+    )
+
+
 def bm25_scores(index: InvertedIndex, queries: DataFrame,
                 id_col: str = "query_id", text_col: str = "text") -> DataFrame:
     """(query_id, doc_id, score, matched_terms) for every candidate.
@@ -64,36 +112,17 @@ def bm25_scores(index: InvertedIndex, queries: DataFrame,
         F.broadcast(qt.select("term").distinct()), "term"
     )
     matched = index.doc_terms.join(F.broadcast(qt), "term")
-    # one exchange serves the score-sum AND every downstream
-    # per-query window (guide §2.4): hash by query_id alone — it
-    # satisfies groupBy(query_id, doc_id) and Window(query_id)
-    scored = matched.join(F.broadcast(qt_stats), "term").repartition(
-        F.col("query_id")
-    ).withColumn(
-        "term_score",
+    return sum_scores(
+        matched.join(F.broadcast(qt_stats), "term"),
         score_col(F.col("tf"), F.col("df"), F.col("doc_len"),
                   index.n_docs, index.avgdl),
-    )
-    return scored.groupBy("query_id", "doc_id").agg(
-        F.sum("term_score").alias("score"),
-        F.count(F.lit(1)).alias("matched_terms"),
     )
 
 
 def bm25_topk(index: InvertedIndex, queries: DataFrame, k: int = 10,
               id_col: str = "query_id", text_col: str = "text") -> DataFrame:
-    """(query_id, rank, doc_id, score, matched_terms), rank 1..k with
-    the deterministic tie-break (score DESC, doc_id ASC) — SURVEY §2.5
-    W2's explicit replacement for Counter insertion order."""
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("doc_id").asc()
-    )
-    return (
-        bm25_scores(index, queries, id_col, text_col)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "doc_id", "score", "matched_terms")
-    )
+    """Top-k of ``bm25_scores`` (see ``rank_top``)."""
+    return rank_top(bm25_scores(index, queries, id_col, text_col), k)
 
 
 def per_query_thresholds(queries: DataFrame,

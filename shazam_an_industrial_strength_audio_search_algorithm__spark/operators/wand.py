@@ -13,13 +13,14 @@ overlapping block bound per term. Intervals are processed in
 descending upper-bound order, scoring is numpy-vectorized per
 interval, and the loop stops as soon as the running top-k floor
 beats the best remaining interval bound — blocks in skipped
-intervals are never decoded.
+intervals are never read.
 
-Execution shape: candidate blocks (compressed payloads + bounds, no
-decoding) shuffle once, grouped per query; the interval loop runs in
-``applyInPandas``. Queries are the small axis (the reference's nj=32
-splits); the heavy axis — posting volume — is touched only through
-bound-gated decodes.
+Execution shape: candidate blocks (posting arrays + bounds) shuffle
+once, grouped per query; the interval loop runs in ``applyInPandas``
+over the arrays Arrow hands it. Queries are the small axis (the
+reference's nj=32 splits); the heavy axis — posting volume — is
+touched only through bound-gated block reads (``blocks_decoded``
+counts a block the first time a query's traversal reads it).
 
 Bounds are recomputed from stored raw stats (max_tf, min_dl) under
 the CURRENT snapshot's avgdl, so pruning stays safe after incremental
@@ -47,9 +48,6 @@ from shazam_an_industrial_strength_audio_search_algorithm__spark.functions.bm25 
     K1,
     idf_py,
 )
-from shazam_an_industrial_strength_audio_search_algorithm__spark.functions.codec import (
-    decode_block,
-)
 from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.segments import (
     SegmentIndex,
 )
@@ -69,11 +67,11 @@ RESULT_SCHEMA = T.StructType(
 
 class _Term:
     """One term-generation's blocks: boundary arrays + lazy per-block
-    decode.
+    scoring.
 
-    The decode cache lives on the instance, so in batched execution
+    The score cache lives on the instance, so in batched execution
     (one ``_Term`` per term shared by every query in the group) a
-    block decodes at most once per group; ``requested`` tracks which
+    block scores at most once per group; ``requested`` tracks which
     blocks the CURRENT query actually needed (reset per query), so
     per-query pruning counters stay meaningful under sharing.
 
@@ -89,8 +87,8 @@ class _Term:
     Deletions only SHRINK a block's true max score, so the stored
     max_tf/min_dl bounds remain safe upper bounds without rewrite."""
 
-    __slots__ = ("idf", "los", "his", "bounds", "payloads", "cache",
-                 "requested", "micro", "gen", "tomb", "raw_cache",
+    __slots__ = ("idf", "los", "his", "bounds", "ids", "tfs", "dls",
+                 "cache", "requested", "micro", "gen", "tomb",
                  "_bound_base")
 
     def __init__(self, idf: float | None, g: pd.DataFrame, avgdl: float,
@@ -107,9 +105,10 @@ class _Term:
         # on layered snapshots the exact idf is only known after the
         # tombstone-dead df prepass ran over every generation
         self._bound_base = mt / (mt + K1 * (1.0 - B + B * md / avgdl))
-        self.payloads = list(g["payload"])
+        self.ids, self.tfs, self.dls = (
+            list(g["doc_ids"]), list(g["tfs"]), list(g["dls"])
+        )
         self.cache: dict[int, tuple] = {}
-        self.raw_cache: dict[int, tuple] = {}
         self.requested: set[int] = set()
         if idf is not None:
             self.set_idf(idf)
@@ -127,9 +126,9 @@ class _Term:
             self.bounds = bounds
 
     def _raw(self, bi: int):
-        if bi not in self.raw_cache:
-            self.raw_cache[bi] = decode_block(bytes(self.payloads[bi]))
-        return self.raw_cache[bi]
+        return (np.asarray(self.ids[bi], dtype=np.int64),
+                np.asarray(self.tfs[bi], dtype=np.int64),
+                np.asarray(self.dls[bi], dtype=np.int64))
 
     def _alive_mask(self, ids: np.ndarray) -> np.ndarray | None:
         """Boolean mask of postings NOT superseded by a tombstone, or
@@ -166,9 +165,6 @@ class _Term:
             if self.micro:
                 contribs = np.floor(contribs * 1e6 + 0.5).astype(np.int64)
             self.cache[bi] = (ids, contribs)
-            # the raw decode is only re-read by the df prepass, which
-            # runs before any slicing — don't hold both copies
-            self.raw_cache.pop(bi, None)
         ids, contribs = self.cache[bi]
         s = int(np.searchsorted(ids, start, side="left"))
         e = int(np.searchsorted(ids, end, side="right"))
@@ -183,11 +179,11 @@ def _pseudo_terms(g: pd.DataFrame, n_docs: int, avgdl: float,
     list of ``_Term`` pseudo-terms sharing one EXACT idf.
 
     Exact df on a merge-on-read snapshot = Σ per-generation stored df
-    − tombstone-superseded postings; the dead count decodes ONLY
+    − tombstone-superseded postings; the dead count reads ONLY
     blocks whose doc-id range contains a tombstoned doc (bounded by
-    delta size, and those decodes pre-warm the slice cache's raw
-    side) — the kernel twin of ``SegmentIndex._resolve_layers``'s df
-    recompute, without touching the un-tombstoned bulk. A term whose
+    delta size) — the kernel twin of
+    ``SegmentIndex._resolve_layers``'s df recompute, without touching
+    the un-tombstoned bulk. A term whose
     alive df reaches 0 is dropped entirely (all postings dead)."""
     pts: list[_Term] = []
     df_total = 0
@@ -243,7 +239,7 @@ def _topk_one_query(terms: list[_Term], k: int, avgdl: float):
     n_int = starts.size
     if n_int == 0:
         return (np.zeros(0, np.int64), np.zeros(0), np.zeros(0, np.int32),
-                0, sum(len(t.payloads) for t in terms))
+                0, sum(len(t.los) for t in terms))
 
     # per (interval, term): overlapping block index (or -1) and bound
     blk = np.full((len(terms), n_int), -1, dtype=np.int64)
@@ -321,7 +317,7 @@ def _topk_one_query(terms: list[_Term], k: int, avgdl: float):
 
     sel = np.lexsort((top_docs, -top_scores))[:k]
     decoded = sum(len(t.requested) for t in terms)
-    total = sum(len(t.payloads) for t in terms)
+    total = sum(len(t.los) for t in terms)
     return (top_docs[sel], top_scores[sel], top_matched[sel], decoded, total)
 
 
@@ -350,9 +346,9 @@ def wand_topk(
     shuffle-partitions default untouched; see BENCH/BASELINE.md
     round-4 knob table) and each candidate block shuffles
     ONCE per group whose queries touch its term — not once per query.
-    With a Q-query batch sharing hot terms this cuts shuffled payload
-    bytes by ~Q/n_groups, and queries inside a group share one decode
-    cache per term, so a hot term's blocks decode once for the whole
+    With a Q-query batch sharing hot terms this cuts shuffled posting
+    bytes by ~Q/n_groups, and queries inside a group share one score
+    cache per term, so a hot term's blocks score once for the whole
     group. Per-query results are bit-identical to one-query-per-group
     execution (the kernel is unchanged; only placement and caching
     change).
@@ -414,7 +410,7 @@ def wand_topk(
     # broadcast term side; no term list ever reaches the driver
     block_cols = [
         "term", "df", "salt", "block_seq", "doc_id_lo", "doc_id_hi",
-        "max_tf", "min_dl", "payload",
+        "max_tf", "min_dl", "doc_ids", "tfs", "dls",
     ] + (["gen_seq"] if layered else [])
     blocks = index.blocks_for_query_terms(qt).select(*block_cols)
     # pin parallelism: the per-query loop is CPU-bound Python/numpy —

@@ -116,23 +116,4 @@ def get_spark(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    # Pre-warm the session ONCE at creation: the first JVM job pays
-    # scheduler/codegen initialization (~2.5 s measured) and the first
-    # Python crossing forks the whole worker pool (~2 s at 32 cores) —
-    # session infrastructure, not query work. Paying it here (the
-    # untimed setup region of any driver/benchmark run, exactly like a
-    # cluster pre-starting executors) keeps the first real query's
-    # latency honest instead of charging it one-time process setup.
-    # No input data is touched and nothing is precomputed or cached.
-    app_id = spark.sparkContext.applicationId
-    if (not os.environ.get("SPARK_GRAFT_NO_SESSION_WARMUP")
-            and app_id not in _WARMED):
-        _WARMED.add(app_id)
-        n = spark.sparkContext.defaultParallelism
-        spark.range(0, n, numPartitions=n).mapInPandas(
-            lambda it: it, schema="id long"
-        ).write.format("noop").mode("overwrite").save()
     return spark
-
-
-_WARMED: set[str] = set()

@@ -10,8 +10,8 @@ Lucene's segment merge):
   rebuild of the mutated corpus gives — same docs, same scores, same
   ranks (tombstone supersession + exact df recompute);
 - ``compact()`` merges the layers back to one generation whose blocks
-  are BIT-IDENTICAL (payload bytes, stats, salts, block boundaries)
-  to the from-scratch rebuild — without ever re-reading the corpus;
+  are IDENTICAL (every posting-array element, stats, salts, block
+  boundaries) to the from-scratch rebuild — without ever re-reading the corpus;
 - WAND serves layered snapshots EXACTLY (one pseudo-term per
   (term, generation), tombstone-resolved slices, exact idf from
   per-generation df minus tombstone-dead postings) and still agrees
@@ -331,10 +331,10 @@ def test_compact_blocks_bit_identical_to_rebuild(spark, compacted, rebuilt):
         return set(
             (r["bucket"], r["term"], r["salt"], r["block_seq"], r["df"],
              r["doc_id_lo"], r["doc_id_hi"], r["n_docs"], r["max_tf"],
-             r["min_dl"], r["sha"])
-            for r in idx.segments()
-            .withColumn("sha", F.sha2(F.col("payload"), 256))
-            .collect()
+             r["min_dl"], r["max_tfnorm"], tuple(r["doc_ids"]),
+             tuple(r["tfs"]), tuple(r["dls"]),
+             tuple(tuple(p) for p in r["positions"]))
+            for r in idx.segments().collect()
         )
 
     assert block_set(d) == block_set(rebuilt)

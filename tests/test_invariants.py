@@ -12,9 +12,6 @@ import hashlib
 import pytest
 from pyspark.sql import functions as F
 
-from shazam_an_industrial_strength_audio_search_algorithm__spark.functions.codec import (
-    decode_block,
-)
 from shazam_an_industrial_strength_audio_search_algorithm__spark.functions.tokenize import (
     tokenize_py,
 )
@@ -58,10 +55,10 @@ def test_blocks_ascending_and_df_consistent(spark, built):
     per_term_postings: dict[str, int] = {}
     per_term_df: dict[str, int] = {}
     for r in rows:
-        ids, tfs, dls = decode_block(bytes(r["payload"]))
+        ids, tfs, dls = r["doc_ids"], r["tfs"], r["dls"]
         assert list(ids) == sorted(set(ids)), f"{r['term']}: not ascending"
         assert ids[0] == r["doc_id_lo"] and ids[-1] == r["doc_id_hi"]
-        assert len(ids) == r["n_docs"]
+        assert len(ids) == len(tfs) == len(dls) == r["n_docs"]
         assert max(tfs) <= r["max_tf"] and min(dls) >= r["min_dl"]
         per_term_postings[r["term"]] = per_term_postings.get(r["term"], 0) + len(ids)
         per_term_df[r["term"]] = r["df"]
@@ -80,8 +77,7 @@ def test_doc_len_matches_tokenizer(spark, built, corpus_pdf):
         )
     for r in idx.doc_lens().collect():
         assert truth[r["doc_id"]] == r["doc_len"]
-    # and inside the payloads
+    # and inside the blocks
     for r in idx.segments().collect():
-        ids_, _, dls = decode_block(bytes(r["payload"]))
-        for d, dl in zip(ids_, dls):
+        for d, dl in zip(r["doc_ids"], r["dls"]):
             assert truth[int(d)] == int(dl)

@@ -183,7 +183,7 @@ def test_search_verified_gates_verify_on_topk(spark):
 
 
 def test_search_verified_segment_gates_verify_on_topk(spark):
-    """The persisted two-phase plan (WAND coarse top-k → varint
+    """The persisted two-phase plan (WAND coarse top-k → array-block
     positional verify) must keep the same gating shape: decoded
     occurrences semi-join the broadcast top-k doc set before the
     verify join, so verify cost follows k on the segment path too."""
@@ -200,8 +200,8 @@ def test_search_verified_segment_gates_verify_on_topk(spark):
 
 def test_positional_segment_decode_is_flat(spark):
     """The persisted positional path must carry positions as a flat
-    long column out of the decode kernel (no Generate/explode over an
-    array column after mapInPandas)."""
+    long column out of the one decode generator (no second
+    Generate/explode over a per-posting positions array column)."""
     from shazam_an_industrial_strength_audio_search_algorithm__spark import api
     from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.positional import (
         query_term_positions,

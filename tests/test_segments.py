@@ -197,10 +197,10 @@ def test_bucket_pruning_reads_subset(spark, built, index_dir):
 
 def test_positions_roundtrip_through_segments(spark, corpus_df, tmp_path):
     """store_positions=True: per-doc occurrence offsets survive the
-    varint block codec exactly (segment postings == v1 doc_terms),
-    and the positional verifier gives identical answers on both
-    paths. The same payloads still serve the positions-free BM25
-    decode (trailing section skipped)."""
+    block arrays exactly (segment postings == v1 doc_terms), and the
+    positional verifier gives identical answers on both paths. The
+    same blocks still serve the positions-free BM25 decode (the
+    positions column is simply not read)."""
     from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.positional import (
         positional_verify,
         query_term_positions,
@@ -248,20 +248,24 @@ def test_positions_roundtrip_through_segments(spark, corpus_df, tmp_path):
 
 
 def test_batched_encoder_matches_encode_block(spark):
-    """The vectorized partition encoder must emit byte-identical
-    payloads to the reference single-block codec (encode_block), for
-    both layouts (with/without positions), across group/block
-    boundaries and negative doc_ids."""
+    """The JVM block encoder (``encode_blocks``) must emit exactly the
+    blocks of a plain numpy reference chunker (``encode_block`` below:
+    each (term, salt) run split every block_size rows in doc_id
+    order), for both layouts (with/without positions), across
+    group/block boundaries and negative doc_ids — every array element
+    and every block stat."""
     import numpy as np
     import pandas as pd
 
-    from shazam_an_industrial_strength_audio_search_algorithm__spark.functions.codec import (
-        encode_block,
+    from shazam_an_industrial_strength_audio_search_algorithm__spark.functions.bm25 import (
+        B,
+        K1,
     )
     from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.segments import (
-        _encode_partition,
+        encode_blocks,
     )
 
+    avgdl, block_size = 300.0, 4
     rng = np.random.RandomState(3)
     rows = []
     for term, salt, n_docs in [("a", 0, 1), ("a", 1, 7), ("b", 0, 5),
@@ -275,34 +279,67 @@ def test_batched_encoder_matches_encode_block(spark):
             rows.append({"bucket": 0, "term": term, "salt": salt,
                          "doc_id": int(d), "tf": tf,
                          "doc_len": int(rng.randint(10, 500)),
-                         "positions": pos.astype(np.int64)})
-    pdf = pd.DataFrame(rows).sort_values(
-        ["term", "salt", "doc_id"], ignore_index=True
+                         "positions": [int(p) for p in pos]})
+    pdf = pd.DataFrame(rows)
+    assert (pdf["doc_id"] < 0).any() and (pdf["doc_id"] > 0).any()
+
+    def encode_block(g):
+        """One (term, salt) run → {block_seq: block row}, in numpy."""
+        g = g.sort_values("doc_id")
+        ids = g["doc_id"].to_numpy(np.int64)
+        tfs = g["tf"].to_numpy(np.int64)
+        dls = g["doc_len"].to_numpy(np.int64)
+        out = {}
+        for seq, s in enumerate(range(0, len(ids), block_size)):
+            e = min(s + block_size, len(ids))
+            tfnorm = tfs[s:e] / (
+                tfs[s:e] + K1 * (1.0 - B + B * dls[s:e] / avgdl)
+            )
+            out[seq] = {
+                "doc_id_lo": int(ids[s]), "doc_id_hi": int(ids[e - 1]),
+                "n_docs": e - s, "max_tf": int(tfs[s:e].max()),
+                "min_dl": int(dls[s:e].min()),
+                "max_tfnorm": float(tfnorm.max()),
+                "doc_ids": ids[s:e].tolist(), "tfs": tfs[s:e].tolist(),
+                "dls": dls[s:e].tolist(),
+                "positions": list(g["positions"].iloc[s:e]),
+            }
+        return out
+
+    exp = {}
+    for (term, salt), g in pdf.groupby(["term", "salt"], sort=True):
+        for seq, blk in encode_block(g).items():
+            exp[(term, salt, seq)] = blk
+    assert any(k[2] > 0 for k in exp), "no block boundary exercised"
+    postings = spark.createDataFrame(
+        pdf,
+        "bucket int, term string, salt int, doc_id bigint, tf int, "
+        "doc_len int, positions array<int>",
+    )
+    for store_pos in (False, True):
+        got = encode_blocks(postings, avgdl, block_size, store_pos).collect()
+        assert len(got) == len(exp)
+        for r in got:
+            want = dict(exp[(r["term"], r["salt"], r["block_seq"])])
+            if not store_pos:
+                assert "positions" not in r.asDict()
+                del want["positions"]
+            assert {k: r[k] for k in want} == want, (r["term"], r["salt"], r["block_seq"],
+                                  store_pos)
+
+
+def test_encoder_rejects_duplicate_doc_ids(spark):
+    """A (term, salt) run holding one doc twice is a caller bug (the
+    unique-doc_id precondition): the encoder fails loudly instead of
+    writing a block with a repeated posting."""
+    from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.segments import (
+        encode_blocks,
     )
 
-    for store_pos in (False, True):
-        got = pd.concat(
-            list(_encode_partition(300.0, 4, store_pos)(iter([pdf]))),
-            ignore_index=True,
-        )
-        # expected: per (term, salt) group, blocks of 4 via encode_block
-        exp = {}
-        for (term, salt), g in pdf.groupby(["term", "salt"], sort=True):
-            g = g.sort_values("doc_id")
-            ids = g["doc_id"].to_numpy(np.int64)
-            tfs = g["tf"].to_numpy(np.int64)
-            dls = g["doc_len"].to_numpy(np.int64)
-            pos = np.concatenate([np.asarray(p) for p in g["positions"]])
-            offs = np.concatenate(([0], np.cumsum(tfs)))
-            for seq, s in enumerate(range(0, len(ids), 4)):
-                e = min(s + 4, len(ids))
-                p = pos[offs[s]:offs[e]] if store_pos else None
-                exp[(term, salt, seq)] = encode_block(
-                    ids[s:e], tfs[s:e], dls[s:e], p
-                )
-        assert len(got) == len(exp)
-        for _, r in got.iterrows():
-            want = exp[(r["term"], int(r["salt"]), int(r["block_seq"]))]
-            assert bytes(r["payload"]) == want, (
-                r["term"], r["salt"], r["block_seq"], store_pos
-            )
+    postings = spark.createDataFrame(
+        [(0, "a", 0, -5, 1, 10), (0, "a", 0, 7, 2, 10), (0, "a", 0, 7, 1, 12)],
+        "bucket int, term string, salt int, doc_id bigint, tf int, "
+        "doc_len int",
+    )
+    with pytest.raises(Exception, match="duplicate doc_id"):
+        encode_blocks(postings, 10.0, 4).collect()

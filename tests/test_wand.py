@@ -79,9 +79,6 @@ def test_interval_kernel_covers_max_int64_doc_id():
     import numpy as np
     import pandas as pd
 
-    from shazam_an_industrial_strength_audio_search_algorithm__spark.functions.codec import (
-        encode_block,
-    )
     from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.wand import (
         _Term,
         _topk_one_query,
@@ -94,7 +91,7 @@ def test_interval_kernel_covers_max_int64_doc_id():
     g = pd.DataFrame({
         "doc_id_lo": [int(ids[0])], "doc_id_hi": [int(ids[-1])],
         "max_tf": [3], "min_dl": [10],
-        "payload": [encode_block(ids, tfs, dls)],
+        "doc_ids": [ids], "tfs": [tfs], "dls": [dls],
     })
     term = _Term(idf=1.0, g=g, avgdl=10.0)
     docs, scores, matched, decoded, total = _topk_one_query(
@@ -117,9 +114,6 @@ def test_interval_kernel_covers_lone_max_block_among_other_cuts():
     import numpy as np
     import pandas as pd
 
-    from shazam_an_industrial_strength_audio_search_algorithm__spark.functions.codec import (
-        encode_block,
-    )
     from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.wand import (
         _Term,
         _topk_one_query,
@@ -134,7 +128,7 @@ def test_interval_kernel_covers_lone_max_block_among_other_cuts():
         return {
             "doc_id_lo": int(ids[0]), "doc_id_hi": int(ids[-1]),
             "max_tf": int(tfs.max()), "min_dl": 10,
-            "payload": encode_block(ids, tfs, dls),
+            "doc_ids": ids, "tfs": tfs, "dls": dls,
         }
 
     # term A: two blocks — [5,100] and the lone [max,max] block
