@@ -26,12 +26,12 @@ to spark-submit and the corpus scans as a real Iceberg table), or
         --py-files /tmp/engine.zip scripts/run_pipeline.py \
         build --corpus table:lake.db.source_code --index /data/index
 
-Incremental maintenance (copy-on-write, or merge-on-read with
-``--mode delta`` followed eventually by ``compact``)::
+Incremental maintenance (each update is a merge-on-read layer;
+``compact`` folds the layers back into one generation)::
 
     spark-submit --py-files /tmp/engine.zip scripts/run_pipeline.py \
         update --index /data/index --add /data/new_docs_parquet \
-        [--delete /data/delete_keys_parquet] [--mode delta]
+        [--delete /data/delete_keys_parquet]
 
     spark-submit --py-files /tmp/engine.zip scripts/run_pipeline.py \
         compact --index /data/index
@@ -143,10 +143,6 @@ def main(argv: list[str]) -> int:
     u.add_argument("--add")
     u.add_argument("--delete")
     u.add_argument("--resume", action="store_true")
-    u.add_argument("--mode", choices=["rebuild", "delta"], default="rebuild",
-                   help="rebuild = copy-on-write (re-encode affected "
-                        "buckets, WAND-ready); delta = merge-on-read "
-                        "(O(delta) layer + tombstones; compact later)")
 
     c = sub.add_parser("compact",
                        help="multi-way sorted merge of delta layers back "
@@ -319,11 +315,10 @@ def main(argv: list[str]) -> int:
             add_corpus=read_input(spark, args.add) if args.add else None,
             delete_keys=read_input(spark, args.delete) if args.delete else None,
             resume=args.resume,
-            mode=args.mode,
         )
         print(
             f"snapshot={rep.snapshot_version} affected={rep.affected_buckets} "
-            f"n_docs={rep.n_docs} mode={args.mode}"
+            f"n_docs={rep.n_docs}"
         )
         return 0
 

@@ -13,7 +13,7 @@ one JSON line for the bench log.
     build   --corpus DIR --index DIR      parquet-backed segment build
     queries --corpus DIR --out FILE [--n 256]  sampled query batch
     query   --index DIR --queries FILE [--wand]  batch top-k timing
-    update  --index DIR --start N [--add 10000] [--mode delta]
+    update  --index DIR --start N [--add 10000]
     compact --index DIR
 
 Standard knobs (the 500k/1M sessions' settings): local[32],
@@ -243,9 +243,9 @@ def cmd_update(args) -> None:
     spark = _spark(args.cores, shuffle=args.shuffle)
     add = distributed_corpus(spark, args.add, start=args.start)
     t0 = time.monotonic()
-    rep = apply_updates(spark, args.index, add_corpus=add, mode=args.mode)
+    rep = apply_updates(spark, args.index, add_corpus=add)
     _emit({
-        "leg": "update", "mode": args.mode, "added": args.add,
+        "leg": "update", "added": args.add,
         "sec": round(time.monotonic() - t0, 1),
         "snapshot": rep.snapshot_version, "n_docs": rep.n_docs,
     })
@@ -319,7 +319,6 @@ def main(argv: list[str]) -> int:
     u.add_argument("--index", required=True)
     u.add_argument("--start", type=int, required=True)
     u.add_argument("--add", type=int, default=10000)
-    u.add_argument("--mode", choices=["rebuild", "delta"], default="delta")
 
     c = sub.add_parser("compact")
     c.add_argument("--index", required=True)

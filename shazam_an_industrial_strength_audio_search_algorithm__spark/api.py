@@ -1079,7 +1079,7 @@ def docs_layered_segment_index(spark: SparkSession, sf_dir: str):
         apply_updates(
             spark, d,
             add_corpus=docs.filter((mod7 == 3) | (mod7 == 6)),
-            mode="delta", explicit_ids=True,
+            explicit_ids=True,
             # the batch keys are distinct documents-table doc_ids by
             # construction — skip the strict-mode uniqueness probe job
             assume_unique=True,
@@ -1087,7 +1087,7 @@ def docs_layered_segment_index(spark: SparkSession, sf_dir: str):
         )
         apply_updates(
             spark, d, delete_keys=ghosts.select("doc_id"),
-            mode="delta", explicit_ids=True,
+            explicit_ids=True,
         )
         _LAYERED_SEG_CACHE[sf_dir] = d
     return SegmentIndex.open(spark, _LAYERED_SEG_CACHE[sf_dir])

@@ -1,4 +1,4 @@
-"""Incremental index maintenance: upsert / delete / restore.
+"""Incremental index maintenance: upsert / delete / compact / restore.
 
 Reference parity (``utils/Hashing_update.py``, SURVEY §3.3):
 
@@ -9,19 +9,19 @@ Reference parity (``utils/Hashing_update.py``, SURVEY §3.3):
   470-481``)               → ``apply_updates(delete_keys=...)``
   (empty terms disappear because their posting groups become empty)
 - backup-then-rewrite of all catalogs (``:102-108``) → a real
-  snapshot commit: only affected buckets are rebuilt, every other
-  bucket is inherited by path; ``restore()`` is a CURRENT-pointer
+  snapshot commit: every update stacks one merge-on-read layer on
+  the inherited base generation; ``restore()`` is a CURRENT-pointer
   flip (the reference's manual backup restore, for free).
 
-Scale analysis: an update touching D docs with T distinct terms
-rebuilds only the buckets those terms hash into — work is
-O(postings in affected buckets), not O(index). The removed-docs
-probe is a predicate-pushed scan of ``doc_terms`` (at 10^12 scale
-you'd add a doc_id bloom per file; the dataflow is unchanged).
-Global stats (n_docs, avgdl) are recomputed from the incrementally
-maintained doc_lens table and stored in the snapshot; stored
-block bounds stay safe because WAND recomputes bounds from raw
-(max_tf, min_dl) under the current avgdl (see segments.py).
+Scale analysis: an update touching D docs writes only its own
+postings (a delta layer), the added docs' lens and a doc-id
+tombstone set — O(D), never a base rewrite. Readers resolve the
+layers at query time; ``compact()`` folds them back into one
+generation whose blocks equal a from-scratch rebuild. Global stats
+(n_docs, sum_dl, avgdl) are maintained by exact incremental
+accounting and stored in the snapshot; stored block bounds stay safe
+because WAND recomputes bounds from raw (max_tf, min_dl) under the
+current avgdl (see segments.py).
 """
 
 from __future__ import annotations
@@ -30,7 +30,7 @@ import json
 import os
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.index_build import (
@@ -43,29 +43,14 @@ from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.index
 from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.segments import (
     SegmentIndex,
     _atomic_write_json,
+    _next_commit_version,
     _read_current,
+    _snapshot_versions,
     _write_current,
     bucket_col,
     build_buckets_batch,
     read_snapshot,
 )
-
-
-def _next_version(index_dir: str, base_version: int) -> int:
-    """Smallest version above EVERY existing snapshot, not just the
-    base: after restore() the base may be an old snapshot while newer
-    ones are still retained — reusing their version would overwrite
-    data generations those snapshots reference (static overwrites of
-    dt/removed staging + dynamic overwrites of seg partitions), i.e.
-    silently corrupt retained history."""
-    versions = [base_version]
-    sdir = f"{index_dir}/snapshots"
-    if os.path.isdir(sdir):
-        versions += [
-            int(n[1:-5]) for n in os.listdir(sdir)
-            if n.startswith("v") and n.endswith(".json")
-        ]
-    return max(versions) + 1
 
 
 @dataclass
@@ -84,7 +69,7 @@ def apply_updates(
     add_corpus: DataFrame | None = None,
     delete_keys: DataFrame | None = None,
     resume: bool = False,
-    mode: str = "rebuild",
+    mode: str = "delta",
     assume_unique: bool = False,
     auto_compact: "CompactionPolicy | None" = None,
     explicit_ids: bool = False,
@@ -97,21 +82,17 @@ def apply_updates(
     ``delete_keys``: rows with (repo, path, commit); missing keys are
     silently skipped. Resumable per affected bucket, like the build.
 
-    ``mode`` picks the write-amplification trade (the Iceberg
-    copy-on-write vs merge-on-read split):
-
-    - ``"rebuild"`` (copy-on-write): every bucket any touched term
-      hashes into is re-encoded whole. Queries stay single-layer
-      (WAND-ready), but a 10-doc update rewrites multi-GB buckets at
-      10^12-file scale.
-    - ``"delta"`` (merge-on-read): the update writes ONLY its own
-      postings as a new delta layer plus a doc-id tombstone set —
-      write cost O(delta), zero base rewrites. Readers resolve
-      layers at query time (``SegmentIndex._resolve_layers``:
-      tombstone supersession + exact df recompute over query-term
-      postings); ``maintenance.compact()`` later multi-way-merges
-      the layers back to one generation (Lucene segment-merge
-      analog, the reference's ``Combine.py:55-62`` consolidation).
+    Every update is merge-on-read (the Iceberg/Lucene delta shape):
+    it writes ONLY its own postings as a new delta layer plus a doc-id
+    tombstone set — write cost O(delta), zero base rewrites. Readers
+    resolve layers at query time (``SegmentIndex._resolve_layers``:
+    tombstone supersession + exact df recompute over query-term
+    postings); ``compact()`` multi-way-merges the layers back to one
+    generation (Lucene segment-merge analog, the reference's
+    ``Combine.py:55-62`` consolidation). A caller that wants a
+    single-layer snapshot after the update calls ``compact()`` or
+    passes ``auto_compact=CompactionPolicy(max_layers=1)``.
+    ``mode`` accepts only ``"delta"``.
 
     ``add_doc_terms``: optional pre-tokenized postings (doc_id, term,
     tf[, positions], doc_len) for EXACTLY the deduped ``add_corpus``
@@ -126,25 +107,23 @@ def apply_updates(
     compaction calls (the policy-fired compactions appear in the
     snapshot log with ``trigger="policy:..."``).
     """
-    if mode not in ("rebuild", "delta"):
-        raise ValueError(f"mode must be 'rebuild' or 'delta', got {mode!r}")
+    if mode != "delta":
+        raise ValueError(
+            f"mode must be 'delta', got {mode!r}: every update writes a "
+            "merge-on-read layer; call compact() for a single-layer "
+            "snapshot"
+        )
     if add_doc_terms is not None and add_corpus is None:
         raise ValueError("add_doc_terms requires add_corpus (the batch "
                          "whose postings it carries)")
     base = SegmentIndex.open(spark, index_dir)
-    if mode == "rebuild" and base.has_deltas:
-        raise ValueError(
-            "rebuild-mode update on a layered snapshot would read "
-            "unresolved doc_terms — run compact() first, or keep using "
-            "mode='delta'"
-        )
-    new_version = _next_version(index_dir, base.version)
+    new_version = _next_commit_version(index_dir)
     gen = f"u{new_version}"
     mdir = f"{index_dir}/manifests/{gen}"
     os.makedirs(mdir, exist_ok=True)
     params_path = f"{mdir}/params.json"
 
-    dtdelta_path = f"{index_dir}/data/dtdelta_{gen}"
+    dt_path = f"{index_dir}/data/dt_{gen}"
     removed_path = f"{index_dir}/data/removed_{gen}"
     dl_path = f"{index_dir}/data/dl_{gen}"
 
@@ -187,32 +166,26 @@ def apply_updates(
             removed = removed_parts[0]
             for p in removed_parts[1:]:
                 removed = removed.unionByName(p)
-            removed = removed.distinct()
-            if mode == "delta":
-                # the delta-mode stats accounting needs (n, Σdoc_len)
-                # of the removed docs actually alive — ride the
-                # removed write as an Observation over a doc_lens left
-                # join (count of non-null dl ≡ the alive semi-join)
-                # instead of re-reading the just-written parquet in a
-                # separate aggregation job
-                from pyspark.sql import Observation
-
-                rem_obs = Observation(f"rem_{gen}")
-                removed = (
-                    removed.join(
-                        base.doc_lens().select("doc_id", "doc_len"),
-                        "doc_id", "left",
-                    )
-                    .observe(rem_obs,
-                             F.count("doc_len").alias("n"),
-                             F.sum("doc_len").alias("s"))
+            # the stats accounting needs (n, Σdoc_len) of the removed
+            # docs actually alive — ride the removed write as an
+            # Observation over a doc_lens left join (count of non-null
+            # dl ≡ the alive semi-join) instead of re-reading the
+            # just-written parquet in a separate aggregation job
+            rem_obs = Observation(f"rem_{gen}")
+            removed = (
+                removed.distinct().join(
+                    base.doc_lens().select("doc_id", "doc_len"),
+                    "doc_id", "left",
                 )
+                .observe(rem_obs,
+                         F.count("doc_len").alias("n"),
+                         F.sum("doc_len").alias("s"))
+            )
             removed.select("doc_id").write.mode("overwrite")\
                 .parquet(removed_path)
 
         # --- delta doc_terms for added docs (schema must match the
         # base snapshot's doc_terms: positions present or not) --------
-        has_delta_rows = False
         stage = None
         if add_corpus is not None:
             store_pos = base.snapshot.get("store_positions", False)
@@ -249,69 +222,56 @@ def apply_updates(
                 ).withColumn(
                     "bucket", bucket_col(F.col("term"), base.n_buckets)
                 )
-            delta_read_path = (
-                f"{index_dir}/data/dt_{gen}" if mode == "delta"
-                else dtdelta_path
-            )
-            if mode == "delta":
-                # the delta IS this generation's doc_terms: partition
-                # by bucket so the layer's bucket→path map prunes
-                (
-                    delta.write.mode("overwrite")
-                    .partitionBy("bucket")
-                    .parquet(delta_read_path)
-                )
-            else:
-                delta.write.mode("overwrite").parquet(dtdelta_path)
-            # a batch whose docs all tokenize to empty produces ZERO
-            # part files (partitionBy writes none for 0 rows) — reading
-            # that back would fail schema inference. Legitimate input
-            # (e.g. binary/whitespace files): record a no-op/delete-only
-            # update instead of crashing.
-            has_delta_rows = any(
-                f.endswith(".parquet")
-                for _, _, files in os.walk(delta_read_path)
-                for f in files
+            # the delta IS this generation's doc_terms: partition by
+            # bucket so the layer's bucket→path map prunes
+            (
+                delta.write.mode("overwrite")
+                .partitionBy("bucket")
+                .parquet(dt_path)
             )
 
         # --- affected buckets ------------------------------------------
-        affected = set()
-        if has_delta_rows:
-            if mode == "delta":
-                # the partitioned write just materialized one
-                # ``bucket=K`` dir per affected bucket — read the
-                # answer off the directory names instead of running a
-                # distinct-aggregation job over the delta parquet
-                affected.update(
-                    int(name.split("=", 1)[1])
-                    for name in os.listdir(delta_read_path)
-                    if name.startswith("bucket=")
-                )
-            else:
-                affected.update(
-                    r["bucket"]
-                    for r in spark.read.parquet(delta_read_path)
-                    .select("bucket").distinct().collect()
-                )
-        if removed is not None and mode == "rebuild":
-            # delta mode never touches base buckets — deletes are
-            # tombstones applied at read; removal-affected buckets
-            # matter only to compaction
-            removed_ids = spark.read.parquet(removed_path)
-            affected.update(
-                r["bucket"]
-                for r in base.doc_terms()
-                .join(F.broadcast(removed_ids), "doc_id", "left_semi")
-                .select("bucket").distinct().collect()
-            )
-        affected = sorted(affected)
+        # the partitioned write just materialized one ``bucket=K`` dir
+        # per affected bucket — read the answer off the directory names
+        # instead of running a distinct-aggregation job over the delta
+        # parquet. A batch whose docs all tokenize to empty (e.g.
+        # binary/whitespace files) writes no bucket dir at all and
+        # commits as a no-op/delete-only update. Deletes never touch
+        # base buckets: they are tombstones applied at read (their
+        # buckets matter only to compaction).
+        affected = sorted(
+            int(name.split("=", 1)[1])
+            for name in (os.listdir(dt_path) if os.path.isdir(dt_path)
+                         else [])
+            if name.startswith("bucket=")
+        )
 
         # --- doc_lens + global stats -----------------------------------
-        # narrow off the persisted tokenize stage (doc_len = Σtf, the
-        # same total-token count) — no second tokenizer pass. With
-        # pre-tokenized postings, the doc-count-sized distinct (doc_len
-        # functional on doc_id, postings co-located) replaces the stage
-        new_dl = None
+        # write ONLY the added docs' lens; update stats by exact
+        # incremental accounting — the full doc_lens table is never
+        # rewritten (it would be the one remaining O(index) write in an
+        # otherwise O(delta) update). The lens come narrow off the
+        # persisted tokenize stage (doc_len = Σtf, the same total-token
+        # count) — no second tokenizer pass. With pre-tokenized
+        # postings, the doc-count-sized distinct (doc_len functional on
+        # doc_id, postings co-located) replaces the stage
+        base_sum = base.snapshot.get("sum_dl")
+        base_n = base.n_docs
+        if base_sum is None:  # pre-sum_dl snapshot: one-time scan
+            row = base.doc_lens().agg(
+                F.count(F.lit(1)).alias("n"),
+                F.sum("doc_len").alias("s"),
+            ).collect()[0]
+            base_n, base_sum = int(row["n"] or 0), int(row["s"] or 0)
+        rem_n = rem_sum = 0
+        if removed is not None:
+            # dl of the docs actually alive among the removed set
+            # (ghost delete keys have no doc_lens row and count 0)
+            # — captured by the Observation on the removed write
+            row = rem_obs.get
+            rem_n, rem_sum = int(row["n"] or 0), int(row["s"] or 0)
+        add_n = add_sum = 0
+        has_dl_delta = False
         if add_corpus is not None:
             if stage is not None:
                 new_dl = (
@@ -322,70 +282,24 @@ def apply_updates(
                 new_dl = (
                     add_doc_terms.select("doc_id", "doc_len").distinct()
                 )
-        if mode == "rebuild":
-            dl = base.doc_lens()
-            if removed is not None:
-                dl = dl.join(
-                    F.broadcast(spark.read.parquet(removed_path)),
-                    "doc_id", "left_anti",
-                )
-            if new_dl is not None:
-                dl = dl.unionByName(new_dl)
-            # n/sum ride the write job as an Observation — the
-            # read-back aggregation was a whole extra job for two
-            # scalars the writer already streams past
-            from pyspark.sql import Observation
-
-            obs = Observation(f"dl_{gen}")
-            dl.observe(
+            # n/sum ride the write job as an Observation (one job,
+            # not count-then-write); an all-empty batch's dir is
+            # dropped after the fact so no schema-less/0-row delta
+            # scan ever attaches to the layer
+            obs = Observation(f"dl_delta_{gen}")
+            new_dl.observe(
                 obs, F.count(F.lit(1)).alias("n"),
                 F.sum("doc_len").alias("s"),
             ).write.mode("overwrite").parquet(dl_path)
             row = obs.get
-            n_docs_new = int(row["n"] or 0)
-            sum_dl_new = int(row["s"] or 0)
-        else:
-            # delta: write ONLY the added docs' lens; update stats by
-            # exact incremental accounting — the full doc_lens table
-            # is never rewritten (it would be the one remaining
-            # O(index) write in an otherwise O(delta) update)
-            base_sum = base.snapshot.get("sum_dl")
-            base_n = base.n_docs
-            if base_sum is None:  # pre-sum_dl snapshot: one-time scan
-                row = base.doc_lens().agg(
-                    F.count(F.lit(1)).alias("n"),
-                    F.sum("doc_len").alias("s"),
-                ).collect()[0]
-                base_n, base_sum = int(row["n"] or 0), int(row["s"] or 0)
-            rem_n = rem_sum = 0
-            if removed is not None:
-                # dl of the docs actually alive among the removed set
-                # (ghost delete keys have no doc_lens row and count 0)
-                # — captured by the Observation on the removed write
-                row = rem_obs.get
-                rem_n, rem_sum = int(row["n"] or 0), int(row["s"] or 0)
-            add_n = add_sum = 0
-            if new_dl is not None:
-                # n/sum ride the write job as an Observation (one job,
-                # not count-then-write); an all-empty batch's dir is
-                # dropped after the fact so no schema-less/0-row delta
-                # scan ever attaches to the layer
-                from pyspark.sql import Observation
+            add_n, add_sum = int(row["n"] or 0), int(row["s"] or 0)
+            has_dl_delta = add_n > 0
+            if not has_dl_delta:
+                import shutil as _shutil
 
-                obs = Observation(f"dl_delta_{gen}")
-                new_dl.observe(
-                    obs, F.count(F.lit(1)).alias("n"),
-                    F.sum("doc_len").alias("s"),
-                ).write.mode("overwrite").parquet(dl_path)
-                row = obs.get
-                add_n, add_sum = int(row["n"] or 0), int(row["s"] or 0)
-                if add_n == 0:
-                    import shutil as _shutil
-
-                    _shutil.rmtree(dl_path, ignore_errors=True)
-                    new_dl = None
-            n_docs_new = base_n - rem_n + add_n
-            sum_dl_new = base_sum - rem_sum + add_sum
+                _shutil.rmtree(dl_path, ignore_errors=True)
+        n_docs_new = base_n - rem_n + add_n
+        sum_dl_new = base_sum - rem_sum + add_sum
         _atomic_write_json(
             params_path,
             {
@@ -395,18 +309,19 @@ def apply_updates(
                 "avgdl": (sum_dl_new / n_docs_new) if n_docs_new else 0.0,
                 "affected_buckets": affected,
                 "has_removed": removed is not None,
-                "has_delta": bool(has_delta_rows),
-                "has_dl_delta": bool(new_dl is not None),
+                "has_dl_delta": has_dl_delta,
                 "mode": mode,
             },
         )
         if stage is not None:
             stage.unpersist()
     params = json.load(open(params_path))
-    if params.get("mode", "rebuild") != mode:
+    if params.get("mode") != "delta":
         raise ValueError(
-            f"resuming update {gen} with mode={mode!r} but it was "
-            f"started with mode={params.get('mode', 'rebuild')!r}"
+            f"update {gen} was staged with "
+            f"mode={params.get('mode', 'rebuild')!r}, a copy-on-write "
+            "path that no longer exists: it cannot resume — start a "
+            "fresh update (resume=False)"
         )
     affected = params["affected_buckets"]
     n_docs, avgdl = params["n_docs"], params["avgdl"]
@@ -417,34 +332,12 @@ def apply_updates(
         if resume and os.path.exists(f"{mdir}/bucket_{b}.json")
     ]
     built = [b for b in affected if b not in skipped]
-    if built and mode == "rebuild":
-        # updated doc_terms for the batch = old minus removed + delta,
-        # written partitionBy(bucket) in one job
-        dt = base.doc_terms(built)
-        if params["has_removed"]:
-            dt = dt.join(
-                F.broadcast(spark.read.parquet(removed_path)),
-                "doc_id", "left_anti",
-            )
-        if params["has_delta"]:
-            dt = dt.unionByName(
-                spark.read.parquet(dtdelta_path)
-                .filter(F.col("bucket").isin(built))
-                .select(*dt.columns)
-            )
-        (
-            dt.repartition(max(1, len(built)), "bucket")
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("bucket")
-            .parquet(f"{index_dir}/data/dt_{gen}")
-        )
     if built:
-        # delta mode: dt_{gen} already holds exactly this update's
-        # postings — encode them as a new (small) layer, zero base IO
+        # dt_{gen} holds exactly this update's postings — encode them
+        # as a new (small) layer, zero base IO
         build_buckets_batch(
             spark, index_dir, gen, built,
-            dt_path=f"{index_dir}/data/dt_{gen}",
+            dt_path=dt_path,
             avgdl=avgdl, n_docs=n_docs,
             hot_df=base_snap["hot_df"],
             max_salt_bits=base_snap["max_salt_bits"],
@@ -458,27 +351,20 @@ def apply_updates(
     version = None
     if done:
         version = new_version
-        gen_map = {
-            str(b): {
-                "doc_terms": f"data/dt_{gen}/bucket={b}",
-                "segments": f"data/seg_{gen}/bucket={b}",
-            }
-            for b in affected
+        layer = {
+            "gen": gen,
+            "buckets": {
+                str(b): {
+                    "doc_terms": f"data/dt_{gen}/bucket={b}",
+                    "segments": f"data/seg_{gen}/bucket={b}",
+                }
+                for b in affected
+            },
         }
-        if mode == "rebuild":
-            buckets_map = dict(base_snap["buckets"])
-            buckets_map.update(gen_map)
-            layers = base_snap.get("layers") or []
-            doc_lens_rel = f"data/dl_{gen}"
-        else:
-            buckets_map = dict(base_snap["buckets"])
-            layer = {"gen": gen, "buckets": gen_map}
-            if params["has_removed"]:
-                layer["tombstones"] = f"data/removed_{gen}"
-            if params.get("has_dl_delta"):
-                layer["doc_lens_delta"] = f"data/dl_{gen}"
-            layers = (base_snap.get("layers") or []) + [layer]
-            doc_lens_rel = base_snap["doc_lens"]  # never rewritten
+        if params["has_removed"]:
+            layer["tombstones"] = f"data/removed_{gen}"
+        if params.get("has_dl_delta"):
+            layer["doc_lens_delta"] = f"data/dl_{gen}"
         _atomic_write_json(
             f"{index_dir}/snapshots/v{version}.json",
             {
@@ -490,11 +376,13 @@ def apply_updates(
                 "hot_df": base_snap["hot_df"],
                 "max_salt_bits": base_snap["max_salt_bits"],
                 "store_positions": base_snap.get("store_positions", False),
-                "doc_lens": doc_lens_rel,
-                "buckets": buckets_map,
-                "layers": layers,
+                # base generation and doc_lens are inherited by path,
+                # never rewritten
+                "doc_lens": base_snap["doc_lens"],
+                "buckets": dict(base_snap["buckets"]),
+                "layers": (base_snap.get("layers") or []) + [layer],
                 "parent": params["base_version"],
-                "operation": f"update_{mode}",
+                "operation": "update_delta",
             },
         )
         _write_current(index_dir, version)
@@ -591,7 +479,7 @@ def compact(
             snapshot_version=None, affected_buckets=[], built_buckets=[],
             skipped_buckets=[], n_layers_merged=0,
         )
-    new_version = _next_version(index_dir, base.version)
+    new_version = _next_commit_version(index_dir)
     gen = f"c{new_version}"
     mdir = f"{index_dir}/manifests/{gen}"
     os.makedirs(mdir, exist_ok=True)
@@ -785,7 +673,7 @@ def should_compact(spark: SparkSession, index_dir: str,
                    policy: CompactionPolicy | None = None) -> str | None:
     """Reason string if the policy says compact now, else None."""
     policy = policy or CompactionPolicy()
-    snap = read_snapshot(index_dir, _read_current_version(index_dir))
+    snap = read_snapshot(index_dir)
     layers = snap.get("layers") or []
     if not layers:
         return None
@@ -839,7 +727,7 @@ def vacuum(index_dir: str, keep_last: int = 2) -> dict:
     """
     import shutil
 
-    current = _read_current_version(index_dir)
+    current = _read_current(index_dir)
     log = snapshot_log(index_dir)
     versions = [s["version"] for s in log]
     keep = sorted(set(versions[-keep_last:]) | {current})
@@ -879,10 +767,8 @@ def vacuum(index_dir: str, keep_last: int = 2) -> dict:
                 referenced_gens.add(name)
                 referenced_dirs.update({
                     f"dt_{name}", f"dl_{name}", f"seg_{name}",
+                    f"removed_{name}",
                 })
-    # update generations also reference their delta/removed staging
-    for gen in referenced_gens:
-        referenced_dirs.update({f"dtdelta_{gen}", f"removed_{gen}"})
 
     removed_data, removed_snaps = [], []
     for name in sorted(os.listdir(f"{index_dir}/data")):
@@ -903,16 +789,6 @@ def vacuum(index_dir: str, keep_last: int = 2) -> dict:
     }
 
 
-def _read_current_version(index_dir: str) -> int:
-    return _read_current(index_dir)
-
-
 def snapshot_log(index_dir: str) -> list[dict]:
     """Snapshot lineage, oldest→newest (Iceberg history analog)."""
-    out = []
-    for name in sorted(os.listdir(f"{index_dir}/snapshots")):
-        if name.startswith("v") and name.endswith(".json"):
-            snap = json.load(open(f"{index_dir}/snapshots/{name}"))
-            snap["version"] = int(name[1:-5])
-            out.append(snap)
-    return sorted(out, key=lambda s: s["version"])
+    return [read_snapshot(index_dir, v) for v in _snapshot_versions(index_dir)]

@@ -129,6 +129,7 @@ BLOCK_DDL = (
     "dls array<bigint>"
 )
 POSITIONS_DDL = "positions array<array<bigint>>"
+OBS_BLOCKSTATS_MAX = 128  # max buckets per batch counted on the write job
 
 
 # ---------------------------------------------------------------------------
@@ -176,6 +177,11 @@ def _snapshot_versions(index_dir: str) -> list[int]:
 
 
 def _next_commit_version(index_dir: str) -> int:
+    """One past EVERY existing snapshot and CURRENT, not just the
+    base: after restore() the base may be an old snapshot while newer
+    ones are still retained — reusing their version would overwrite
+    data generations those snapshots reference, i.e. silently corrupt
+    retained history."""
     vs = [0] + _snapshot_versions(index_dir)
     if os.path.exists(f"{index_dir}/CURRENT"):
         vs.append(_read_current(index_dir))
@@ -323,7 +329,9 @@ def build_buckets_batch(
 ) -> None:
     """Build segments for a batch of buckets in ONE Spark job, then
     commit each bucket's manifest (idempotent: dynamic partition
-    overwrite + manifest-last).
+    overwrite + manifest-last). A manifest's n_terms, n_postings and
+    input_digest come from the input term_df; only n_blocks counts
+    the written rows.
 
     Plan: (1) count-only df agg per (bucket, term) — map-side partial
     aggregation, only counts shuffle; (2) hot terms (df > hot_df,
@@ -392,8 +400,7 @@ def build_buckets_batch(
     from pyspark.sql import Observation
 
     nb_obs = None
-    if len(buckets) <= int(os.environ.get(
-            "SPARK_GRAFT_OBS_BLOCKSTATS_MAX", "128")):
+    if len(buckets) <= OBS_BLOCKSTATS_MAX:
         nb_obs = Observation(f"blocks_{gen}")
         out = out.observe(nb_obs, *[
             F.count_if(F.col("bucket") == b).alias(f"b{b}")
@@ -411,10 +418,9 @@ def build_buckets_batch(
     # multiset each bucket was built from (resume can verify a
     # skipped bucket's inputs against it without re-encoding —
     # build_segment_index(verify_inputs=True)); n_terms is the
-    # (bucket, term) row count and n_postings = Σdf, the same values
-    # the previous read-back recomputed from the written blocks
-    # (block salting partitions postings, so Σ n_docs over blocks
-    # = Σ df over terms).
+    # (bucket, term) row count and n_postings = Σdf. All three come
+    # from the encoder's INPUT, so they do not witness what it wrote;
+    # only n_blocks (above) counts written rows.
     lineage = {
         r["bucket"]: r
         for r in term_df.groupBy("bucket")
@@ -494,7 +500,6 @@ def build_segment_index(
     id_col: str = "doc_id",
     text_col: str = "content",
     buckets: list[int] | None = None,
-    phase_a_shuffle: bool = False,
     store_positions: bool = False,
     verify_inputs: bool = False,
     doc_terms_df: DataFrame | None = None,
@@ -634,11 +639,6 @@ def build_segment_index(
             ).persist(StorageLevel.MEMORY_AND_DISK)
             dt = explode_doc_terms(stage, with_positions=store_positions)\
                 .withColumn("bucket", bucket_col(F.col("term"), n_buckets))
-        if phase_a_shuffle:
-            # consolidate to one file set per bucket — enable when
-            # n_buckets × task-count would explode the file count
-            # (large clusters); costs a full shuffle of doc_terms
-            dt = dt.repartition(n_buckets, "bucket")
         (
             dt.write.mode("overwrite")
             .partitionBy("bucket")
@@ -842,23 +842,20 @@ class SegmentIndex:
 
     @property
     def layers(self) -> list[dict]:
-        """Delta layers stacked on the base generation (merge-on-read
-        updates, `maintenance.apply_updates(mode="delta")`), oldest
-        first. Empty for a compacted / freshly built index."""
+        """Delta layers stacked on the base generation, one per
+        ``maintenance.apply_updates`` since the last build or
+        ``compact()``, oldest first. Empty for a compacted / freshly
+        built index."""
         return self.snapshot.get("layers") or []
 
     @property
     def has_deltas(self) -> bool:
         return bool(self.layers)
 
-    def _empty(self, kind: str) -> DataFrame:
-        pos = self.snapshot.get("store_positions", False)
-        if kind == "segments":
-            cols = [BLOCK_DDL] + ([POSITIONS_DDL] if pos else [])
-        else:
-            cols = (["term string, doc_id bigint, tf int"]
-                    + (["positions array<int>"] if pos else [])
-                    + ["doc_len int"])
+    def _empty(self) -> DataFrame:
+        cols = [BLOCK_DDL] + (
+            [POSITIONS_DDL] if self.snapshot.get("store_positions") else []
+        )
         return self.spark.createDataFrame([], ", ".join(cols + ["bucket int"]))
 
     def _scan_map(self, kind: str, bmap: dict,
@@ -903,35 +900,30 @@ class SegmentIndex:
             out = out.unionByName(d)
         return out
 
-    def _read_buckets(self, kind: str, buckets: list[int] | None) -> DataFrame:
-        """Base generation + (if present) delta layers. Layered reads
-        carry a ``gen_seq`` int column (base = 0, layer i = i+1) so
-        downstream tombstone resolution knows which rows a delete
-        supersedes; non-layered reads keep the historical schema
-        (no ``gen_seq``) untouched."""
-        base = self._scan_map(kind, self.snapshot["buckets"], buckets,
+    def segments(self, buckets: list[int] | None = None) -> DataFrame:
+        """Block rows of the base generation + (if present) delta
+        layers. Layered reads carry a ``gen_seq`` int column (base = 0,
+        layer i = i+1) so downstream tombstone resolution knows which
+        rows a delete supersedes; non-layered reads keep the historical
+        schema (no ``gen_seq``) untouched."""
+        base = self._scan_map("segments", self.snapshot["buckets"], buckets,
                               strict=True)
         if not self.has_deltas:
-            return base if base is not None else self._empty(kind)
+            return base if base is not None else self._empty()
         parts = []
         if base is not None:
             parts.append(base.withColumn("gen_seq", F.lit(0)))
         for i, layer in enumerate(self.layers):
-            piece = self._scan_map(kind, layer.get("buckets", {}), buckets)
+            piece = self._scan_map("segments", layer.get("buckets", {}),
+                                   buckets)
             if piece is not None:
                 parts.append(piece.withColumn("gen_seq", F.lit(i + 1)))
         if not parts:
-            return self._empty(kind).withColumn("gen_seq", F.lit(0))
+            return self._empty().withColumn("gen_seq", F.lit(0))
         out = parts[0]
         for d in parts[1:]:
             out = out.unionByName(d)
         return out
-
-    def segments(self, buckets: list[int] | None = None) -> DataFrame:
-        return self._read_buckets("segments", buckets)
-
-    def doc_terms(self, buckets: list[int] | None = None) -> DataFrame:
-        return self._read_buckets("doc_terms", buckets)
 
     def tombstones(self) -> DataFrame | None:
         """(doc_id, gen_seq) union of the layers' tombstone sets, or

@@ -712,7 +712,7 @@ def lsh_upsert(spark, index_dir: str,
                id_col: str = "vec_id",
                vec_col: str = "embedding") -> int:
     """O(delta) maintenance for the persisted sign-LSH layout — the
-    vector-store twin of ``maintenance.apply_updates(mode="delta")``
+    vector-store twin of ``maintenance.apply_updates``
     (reference analog: ``Hashing_update.py:53-100`` overwrite-by-key):
     added vectors land as a bucket-partitioned DELTA batch (bucketed
     with the layout's stored seeded planes, so probe-time pruning

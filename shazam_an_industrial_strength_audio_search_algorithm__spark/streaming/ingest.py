@@ -5,13 +5,11 @@ manual batch step).
 
 Design: a file-source stream of corpus rows feeds ``foreachBatch``;
 each micro-batch applies the SAME snapshot-committing upsert as batch
-maintenance (``operators/maintenance.apply_updates``), by default as
-a merge-on-read delta layer (O(batch) write cost, optional periodic
-``compact()``). Exactly-once comes from the pairing of (a) Structured
+maintenance (``operators/maintenance.apply_updates``): a merge-on-read
+delta layer (O(batch) write cost, optional periodic ``compact()``). Exactly-once comes from the pairing of (a) Structured
 Streaming's checkpointed source offsets and (b) by-key idempotent
-snapshot commits — a replayed batch re-applies the same keys and the
-tombstone-supersession (delta) / overwrite (rebuild) semantics land
-on the same logical index state.
+snapshot commits — a replayed batch re-applies the same keys and
+tombstone supersession lands it on the same logical index state.
 
 Also included: a watermarked event-time aggregation
 (``streaming_term_counts``) showing the engine's term statistics
@@ -47,7 +45,6 @@ def stream_ingest(
     checkpoint_dir: str,
     trigger_available_now: bool = True,
     max_files_per_trigger: int | None = None,
-    mode: str = "delta",
     compact_every: int | None = None,
     compact_policy=None,
 ):
@@ -55,8 +52,7 @@ def stream_ingest(
     the segment index at ``index_dir`` (which must already hold a
     committed snapshot — build the initial index first).
 
-    ``mode="delta"`` (default) is the streaming-native shape: each
-    micro-batch lands as an O(batch) merge-on-read layer + tombstones
+    Each micro-batch lands as an O(batch) merge-on-read layer + tombstones
     — per-batch cost tracks BATCH size, not index size, which is what
     keeps a continuous stream viable against a 100 TB index.
     ``compact_every=N`` folds the accumulated layers back into one
@@ -68,11 +64,9 @@ def stream_ingest(
     pruning sharpness and the tombstone-closure size both degrade as
     layers pile up — the policy keeps serving at peak). Leave both
     None and run
-    ``maintenance.compact()`` on your own schedule. ``mode="rebuild"``
-    re-encodes affected buckets per batch (copy-on-write; keeps the
-    index WAND-ready at all times at much higher write amplification).
+    ``maintenance.compact()`` on your own schedule.
 
-    Exactly-once still holds in delta mode: a replayed micro-batch
+    Exactly-once holds: a replayed micro-batch
     re-applies the same keys, whose tombstone supersession makes the
     re-add idempotent by key — the snapshot version may advance but
     the logical index state cannot diverge.
@@ -114,7 +108,7 @@ def stream_ingest(
         )
         # assume_unique: the window above just deduped by key — skip
         # apply_updates' per-batch uniqueness probe job
-        apply_updates(spark, index_dir, add_corpus=deduped, mode=mode,
+        apply_updates(spark, index_dir, add_corpus=deduped,
                       assume_unique=True, auto_compact=compact_policy)
         if compact_every and (batch_id + 1) % compact_every == 0:
             compact(spark, index_dir)

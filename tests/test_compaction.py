@@ -4,7 +4,7 @@ The contract under test (SURVEY §7 step 4's 'multiway sorted merge of
 segments', the reference's consolidation step ``Combine.py:55-62`` and
 Lucene's segment merge):
 
-- ``apply_updates(mode="delta")`` writes ONLY the update's postings
+- ``apply_updates`` writes ONLY the update's postings
   (a new layer) + a tombstone set — base buckets are never rewritten;
 - layered queries (``segment_topk``) are EXACTLY the results a full
   rebuild of the mutated corpus gives — same docs, same scores, same
@@ -270,14 +270,17 @@ def test_wand_layered_tombstone_cap(spark, layered, monkeypatch):
         wand_topk(idx, _queries(spark, final), k=K)
 
 
-def test_rebuild_mode_refuses_layered(spark, layered, corpus80):
-    d, _ = layered
+def test_rebuild_mode_rejected(spark, rebuilt, corpus80):
+    """The copy-on-write update mode is gone: asking for it on a
+    single-layer index points at compact() and writes nothing."""
     with pytest.raises(ValueError, match="compact"):
         apply_updates(
-            spark, d,
+            spark, rebuilt,
             add_corpus=spark.createDataFrame(corpus80.iloc[70:72]),
             mode="rebuild",
         )
+    assert SegmentIndex.open(spark, rebuilt).version == 1
+    assert not os.path.exists(f"{rebuilt}/manifests/u2")
 
 
 def test_layered_positional_equals_rebuild(spark, layered, rebuilt):

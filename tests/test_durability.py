@@ -198,6 +198,26 @@ def test_vacuum_spares_inflight_generation(spark, corpus_df, tmp_path):
     drop_index(d)
 
 
+def test_resume_of_rebuild_staged_update_raises(spark, corpus_df, tmp_path):
+    """An update staged by the removed copy-on-write mode cannot be
+    resumed as a delta layer: resume refuses it instead of committing
+    from staging it does not understand."""
+    d = str(tmp_path / "idx")
+    build_segment_index(spark, with_doc_id(corpus_df), d, n_buckets=4,
+                        hot_df=8, block_size=16)
+    os.makedirs(f"{d}/manifests/u2")
+    json.dump({"base_version": 1, "n_docs": 1, "sum_dl": 1, "avgdl": 1.0,
+               "affected_buckets": [0], "has_removed": False,
+               "has_delta": True, "has_dl_delta": False, "mode": "rebuild"},
+              open(f"{d}/manifests/u2/params.json", "w"))
+    with pytest.raises(ValueError, match="rebuild"):
+        apply_updates(spark, d, add_corpus=_add_batch(spark, "a"),
+                      resume=True)
+    assert _read_current(d) == 1
+    assert not os.path.exists(f"{d}/snapshots/v2.json")
+    drop_index(d)
+
+
 def test_update_batch_tokenizing_to_empty_completes(spark, corpus_df,
                                                     tmp_path):
     d = str(tmp_path / "idx")

@@ -17,6 +17,7 @@ from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.index
 )
 from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.maintenance import (
     apply_updates,
+    compact,
     restore,
     snapshot_log,
 )
@@ -76,6 +77,8 @@ def test_upsert_then_delete_matches_oracle(
     rep = apply_updates(spark, index_dir, add_corpus=add_df)
     assert rep.snapshot_version == 2
     assert rep.n_docs == len(oracle_docs) + 3  # overwrites don't grow N
+    # the default update is merge-on-read: a layer, no base rewrite
+    assert SegmentIndex.open(spark, index_dir).has_deltas
 
     add_ids = with_doc_id(add_df).select("repo", "path", "commit", "doc_id").toPandas()
     add_with_ids = add_pdf.merge(add_ids, on=["repo", "path", "commit"])
@@ -120,23 +123,30 @@ def test_upsert_then_delete_matches_oracle(
 
     log = snapshot_log(index_dir)
     assert [s["version"] for s in log] == [1, 2, 3]
-    assert log[1]["operation"] == "update_rebuild" and log[1]["parent"] == 1
+    assert log[1]["operation"] == "update_delta" and log[1]["parent"] == 1
+
+    # ---- compact: one generation, same answers ---------------------------
+    assert compact(spark, index_dir).snapshot_version == 4
+    assert not SegmentIndex.open(spark, index_dir).has_deltas
+    _assert_matches_oracle(spark, index_dir, docs_v3, queries_df, queries_pdf)
 
 
 def test_update_touches_only_affected_buckets(spark, state, index_dir):
-    """The inherited buckets of the current snapshot must point at
-    prior-generation paths (no rewrite of untouched data)."""
-    from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.segments import (
-        read_snapshot,
-    )
-
-    snap = read_snapshot(index_dir)
-    gens = {v["segments"].split("/")[1] for v in snap["buckets"].values()}
-    # at least one bucket still served from an older generation OR the
-    # update genuinely touched all buckets — with 4 buckets and a tiny
-    # delete delta, inheritance must occur
-    assert any(g == "seg_init" or g.startswith("seg_u") for g in gens)
-    assert len(gens) >= 1
+    """An update never rewrites data it inherits: its snapshot keeps
+    the parent's base bucket map path for path, and its one new layer
+    points only at its own generation's files."""
+    log = {s["version"]: s for s in snapshot_log(index_dir)}
+    for snap in log.values():
+        if snap["operation"] != "update_delta":
+            continue
+        parent = log[snap["parent"]]
+        assert snap["buckets"] == parent["buckets"]
+        assert snap["doc_lens"] == parent["doc_lens"]
+        assert snap["layers"][:-1] == (parent.get("layers") or [])
+        gen = snap["layers"][-1]["gen"]
+        for paths in snap["layers"][-1]["buckets"].values():
+            assert {p.split("/")[1] for p in paths.values()} == {
+                f"dt_{gen}", f"seg_{gen}"}
 
 
 def test_explicit_ids_update_matches_oracle(spark, corpus_pdf,
