@@ -1508,7 +1508,7 @@ def q_last_wins(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id").alias("ingest_seq"),
         F.col("text"),
     )
-    return dedup_last_wins(docs, strict=True).select(
+    return dedup_last_wins(docs).select(
         F.col("path").alias("key"),
         F.col("ingest_seq").alias("winner_doc_id"),
         F.sha2(F.col("text"), 256).alias("winner_sha"),

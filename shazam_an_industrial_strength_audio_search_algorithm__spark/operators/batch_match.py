@@ -48,6 +48,8 @@ from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.wand 
     wand_topk,
 )
 
+MAX_PARALLEL_GROUPS = 4  # query groups submitted concurrently
+
 
 def _result_schema(mode: str, micro: bool) -> T.StructType:
     if mode == "wand":
@@ -160,12 +162,10 @@ def batch_match_resumable(
         g for g in todo
         if not os.path.exists(f"{out_dir}/manifests/grp_{g}.json")
     ]
-    max_par = max(1, int(os.environ.get(
-        "SPARK_GRAFT_BATCH_MATCH_PARALLEL", "4")))
-    if len(pending) > 1 and max_par > 1:
+    if len(pending) > 1:
         from concurrent.futures import ThreadPoolExecutor
 
-        with ThreadPoolExecutor(min(max_par, len(pending))) as pool:
+        with ThreadPoolExecutor(min(MAX_PARALLEL_GROUPS, len(pending))) as pool:
             # materialize to surface the first exception, like the loop
             list(pool.map(run_group, pending))
     else:

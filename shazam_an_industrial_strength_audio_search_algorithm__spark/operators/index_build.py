@@ -58,7 +58,7 @@ def with_doc_id(corpus: DataFrame) -> DataFrame:
     return corpus.withColumn("doc_id", F.xxhash64(*KEY_COLS))
 
 
-def dedup_last_wins(corpus: DataFrame, strict: bool = True,
+def dedup_last_wins(corpus: DataFrame,
                     assume_unique: bool = False) -> DataFrame:
     """Duplicate (repo,path,commit) keys: last-writer-wins — the dict
     semantics of the reference's ``wav.scp`` parse (``Hashing.py:30``,
@@ -66,21 +66,15 @@ def dedup_last_wins(corpus: DataFrame, strict: bool = True,
     ``ingest_seq`` column is present (the reference's file order made
     explicit).
 
-    Default (``strict=True``, since round 3): deterministic always —
-    with ``ingest_seq`` the true last writer wins; without it the
-    input must carry NO duplicate keys (pass-through), and duplicate
-    keys raise loudly instead of silently resolving to a
-    partition-layout-dependent winner. The uniqueness probe runs one
-    cheap count job over the keys; batches that carry ``ingest_seq``
-    skip it entirely.
+    Deterministic always: with ``ingest_seq`` the true last writer
+    wins; without it the input must carry NO duplicate keys
+    (pass-through), and duplicate keys raise loudly instead of
+    silently resolving to a partition-layout-dependent winner. The
+    uniqueness probe runs one cheap count job over the keys; batches
+    that carry ``ingest_seq`` skip it entirely.
 
-    ``strict=False`` restores the pre-round-3 fallback: pick ONE row
-    per key via ``monotonically_increasing_id`` — fine for
-    dedup-to-single, NOT a stable last-writer (layout-dependent).
-
-    ``assume_unique=True`` skips the strict-mode uniqueness probe
-    entirely (pure pass-through) — for callers that ALREADY
-    deduplicated by key (``stream_ingest`` dedupes every micro-batch
+    ``assume_unique=True`` skips the uniqueness probe entirely (pure
+    pass-through) — for callers that ALREADY deduplicated by key (``stream_ingest`` dedupes every micro-batch
     before ``apply_updates``; paying a second groupBy/count probe per
     batch buys nothing). The trust is the caller's: a violated
     promise yields duplicate postings, not an error."""
@@ -88,25 +82,19 @@ def dedup_last_wins(corpus: DataFrame, strict: bool = True,
 
     if assume_unique and "ingest_seq" not in corpus.columns:
         return corpus
-    if "ingest_seq" in corpus.columns:
-        order = F.col("ingest_seq").desc()
-    elif strict:
+    if "ingest_seq" not in corpus.columns:
         dup = (
             corpus.groupBy(*KEY_COLS).count()
             .filter(F.col("count") > 1).limit(1).count()
         )
         if dup:
             raise ValueError(
-                "dedup_last_wins(strict=True): duplicate "
-                f"{tuple(KEY_COLS)} keys but no ingest_seq column — "
-                "'last' would be partition-layout-dependent. Add a "
-                "monotonic ingest_seq, or pass strict=False to accept "
-                "an arbitrary (non-reproducible) winner"
+                f"dedup_last_wins: duplicate {tuple(KEY_COLS)} keys but "
+                "no ingest_seq column — 'last' would be "
+                "partition-layout-dependent. Add a monotonic ingest_seq"
             )
         return corpus
-    else:
-        order = F.monotonically_increasing_id().desc()
-    w = Window.partitionBy(*KEY_COLS).orderBy(order)
+    w = Window.partitionBy(*KEY_COLS).orderBy(F.col("ingest_seq").desc())
     return (
         corpus.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
@@ -229,29 +217,6 @@ def term_stats(doc_terms: DataFrame) -> DataFrame:
     return doc_terms.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
 
 
-def corpus_stats(corpus: DataFrame, text_col: str = "content") -> tuple[int, float]:
-    """(N, avgdl) — global scalars, computed once and broadcast into
-    the score expression as literals (never re-shuffled). NARROW over
-    the corpus (``size(tokens)`` per row + one partial agg) — never
-    recovered by grouping the postings, which would shuffle the whole
-    index to fetch a per-doc constant (round-1 verdict #5). Docs that
-    tokenize to nothing are excluded (they hold no postings)."""
-    from shazam_an_industrial_strength_audio_search_algorithm__spark.functions.tokenize import (
-        tokens_col,
-    )
-
-    row = (
-        corpus.select(F.size(tokens_col(F.col(text_col))).alias("dl"))
-        .filter(F.col("dl") > 0)
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.avg("dl").alias("avgdl"),
-        )
-        .collect()[0]
-    )
-    return int(row["n"] or 0), float(row["avgdl"] or 0.0)
-
-
 @dataclass
 class InvertedIndex:
     """In-memory (DataFrame) form of the index — engine v1. The
@@ -265,15 +230,15 @@ class InvertedIndex:
 
     @classmethod
     def build(cls, corpus: DataFrame, id_col: str = "doc_id",
-              text_col: str = "content", cache: bool = True) -> "InvertedIndex":
+              text_col: str = "content") -> "InvertedIndex":
         """Tokenize ``corpus`` into doc_terms + term_stats + (N, avgdl).
 
         Precondition: ``id_col`` is unique per corpus row (a missing
         ``doc_id`` is derived from the natural key by ``with_doc_id``;
-        dedupe key collisions first with ``dedup_last_wins``). With
-        ``cache=True`` the stats count distinct (doc_id, doc_len)
-        pairs over the postings, so two rows sharing an id would
-        collapse and (N, avgdl) would disagree with ``corpus_stats``."""
+        dedupe key collisions first with ``dedup_last_wins``). The
+        stats count distinct (doc_id, doc_len) pairs over the
+        postings, so two rows sharing an id would collapse into one
+        doc in (N, avgdl)."""
         from shazam_an_industrial_strength_audio_search_algorithm__spark.session import (
             spread_input,
         )
@@ -283,24 +248,19 @@ class InvertedIndex:
         # the tokenize UDF is the heavy per-row kernel of this build;
         # a single-row-group input otherwise runs it on one task
         corpus = spread_input(corpus)
-        dt = build_doc_terms(corpus, id_col, text_col)
-        if cache:
-            # (N, avgdl) off the cached postings instead of a second
-            # full-corpus tokenize pass (corpus_stats): doc_len is
-            # functionally determined by doc_id, so the distinct
-            # collapses map-side to ~one row per doc (a doc's postings
-            # are co-located by the explode) — a doc-count-sized
-            # shuffle, not the index. avg over the int doc_len sums
-            # exactly in a long, so the double result is
-            # order-independent and bit-equal to corpus_stats'.
-            dt = dt.cache()
-            row = (
-                dt.select("doc_id", "doc_len").distinct()
-                .agg(F.count(F.lit(1)).alias("n"),
-                     F.avg("doc_len").alias("avgdl"))
-                .collect()[0]
-            )
-            n, avgdl = int(row["n"] or 0), float(row["avgdl"] or 0.0)
-        else:
-            n, avgdl = corpus_stats(corpus, text_col)
+        # (N, avgdl) off the cached postings instead of a second
+        # full-corpus tokenize pass: doc_len is functionally determined
+        # by doc_id, so the distinct collapses map-side to ~one row per
+        # doc (a doc's postings are co-located by the explode) — a
+        # doc-count-sized shuffle, not the index. avg over the int
+        # doc_len sums exactly in a long, so the double result is
+        # order-independent.
+        dt = build_doc_terms(corpus, id_col, text_col).cache()
+        row = (
+            dt.select("doc_id", "doc_len").distinct()
+            .agg(F.count(F.lit(1)).alias("n"),
+                 F.avg("doc_len").alias("avgdl"))
+            .collect()[0]
+        )
+        n, avgdl = int(row["n"] or 0), float(row["avgdl"] or 0.0)
         return cls(doc_terms=dt, term_stats=term_stats(dt), n_docs=n, avgdl=avgdl)

@@ -28,6 +28,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -36,8 +37,6 @@ from pyspark.sql import functions as F
 from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.index_build import (
     KEY_COLS,
     dedup_last_wins,
-    doc_term_stage,
-    explode_doc_terms,
     with_doc_id,
 )
 from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.segments import (
@@ -48,8 +47,12 @@ from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.segme
     _snapshot_versions,
     _write_current,
     bucket_col,
-    build_buckets_batch,
+    commit_snapshot,
+    encode_pending,
     read_snapshot,
+    reset_generation,
+    segment_map,
+    stage_doc_terms,
 )
 
 
@@ -119,16 +122,14 @@ def apply_updates(
     base = SegmentIndex.open(spark, index_dir)
     new_version = _next_commit_version(index_dir)
     gen = f"u{new_version}"
-    mdir = f"{index_dir}/manifests/{gen}"
-    os.makedirs(mdir, exist_ok=True)
-    params_path = f"{mdir}/params.json"
-
+    params_path = f"{index_dir}/manifests/{gen}/params.json"
     dt_path = f"{index_dir}/data/dt_{gen}"
     removed_path = f"{index_dir}/data/removed_{gen}"
     dl_path = f"{index_dir}/data/dl_{gen}"
 
     phase_a_done = resume and os.path.exists(params_path)
     if not phase_a_done:
+        reset_generation(index_dir, gen)
         # --- doc ids being replaced or deleted -------------------------
         # explicit_ids: the caller's rows already carry a stable
         # ``doc_id`` (an index built with an explicit id_col — e.g.
@@ -184,51 +185,22 @@ def apply_updates(
             removed.select("doc_id").write.mode("overwrite")\
                 .parquet(removed_path)
 
-        # --- delta doc_terms for added docs (schema must match the
-        # base snapshot's doc_terms: positions present or not) --------
-        stage = None
+        # --- delta doc_terms + doc_lens for added docs ----------------
+        # only the added docs' postings and lens are staged; stats move
+        # by exact incremental accounting — the full doc_lens table is
+        # never rewritten (it would be the one remaining O(index) write
+        # in an otherwise O(delta) update). An all-empty batch's lens
+        # dir is dropped so no schema-less delta scan ever attaches to
+        # the layer.
+        add_n = add_sum = 0
         if add_corpus is not None:
-            store_pos = base.snapshot.get("store_positions", False)
-            if add_doc_terms is not None:
-                # pre-tokenized postings for the batch (e.g. composed
-                # from an already-built in-memory index over the same
-                # docs): no tokenizer pass at all for this update
-                if store_pos and "positions" not in add_doc_terms.columns:
-                    raise ValueError(
-                        "base stores positions but add_doc_terms "
-                        "carries no positions column"
-                    )
-                pcols = ["doc_id", "term", "tf"]
-                if store_pos:
-                    pcols.append("positions")
-                pcols.append("doc_len")
-                delta = add_doc_terms.select(*pcols).withColumn(
-                    "bucket", bucket_col(F.col("term"), base.n_buckets)
-                )
-            else:
-                from pyspark import StorageLevel
-
-                # ONE tokenize pass for the whole update (the build's
-                # phase-A contract applied to deltas): the persisted
-                # stage feeds the delta doc_terms explode below AND
-                # the doc_lens projection further down — previously
-                # new_dl re-ran the tokenizer over the full add_corpus
-                # a second time
-                stage = doc_term_stage(
-                    add_corpus, with_positions=store_pos,
-                ).persist(StorageLevel.MEMORY_AND_DISK)
-                delta = explode_doc_terms(
-                    stage, with_positions=store_pos,
-                ).withColumn(
-                    "bucket", bucket_col(F.col("term"), base.n_buckets)
-                )
-            # the delta IS this generation's doc_terms: partition by
-            # bucket so the layer's bucket→path map prunes
-            (
-                delta.write.mode("overwrite")
-                .partitionBy("bucket")
-                .parquet(dt_path)
+            add_n, add_sum = stage_doc_terms(
+                index_dir, gen, base.n_buckets,
+                base.snapshot.get("store_positions", False),
+                add_corpus, add_doc_terms,
             )
+            if not add_n:
+                shutil.rmtree(dl_path, ignore_errors=True)
 
         # --- affected buckets ------------------------------------------
         # the partitioned write just materialized one ``bucket=K`` dir
@@ -246,15 +218,6 @@ def apply_updates(
             if name.startswith("bucket=")
         )
 
-        # --- doc_lens + global stats -----------------------------------
-        # write ONLY the added docs' lens; update stats by exact
-        # incremental accounting — the full doc_lens table is never
-        # rewritten (it would be the one remaining O(index) write in an
-        # otherwise O(delta) update). The lens come narrow off the
-        # persisted tokenize stage (doc_len = Σtf, the same total-token
-        # count) — no second tokenizer pass. With pre-tokenized
-        # postings, the doc-count-sized distinct (doc_len functional on
-        # doc_id, postings co-located) replaces the stage
         base_sum = base.snapshot.get("sum_dl")
         base_n = base.n_docs
         if base_sum is None:  # pre-sum_dl snapshot: one-time scan
@@ -270,34 +233,6 @@ def apply_updates(
             # — captured by the Observation on the removed write
             row = rem_obs.get
             rem_n, rem_sum = int(row["n"] or 0), int(row["s"] or 0)
-        add_n = add_sum = 0
-        has_dl_delta = False
-        if add_corpus is not None:
-            if stage is not None:
-                new_dl = (
-                    stage.select("doc_id", "doc_len")
-                    .filter(F.col("doc_len") > 0)
-                )
-            else:
-                new_dl = (
-                    add_doc_terms.select("doc_id", "doc_len").distinct()
-                )
-            # n/sum ride the write job as an Observation (one job,
-            # not count-then-write); an all-empty batch's dir is
-            # dropped after the fact so no schema-less/0-row delta
-            # scan ever attaches to the layer
-            obs = Observation(f"dl_delta_{gen}")
-            new_dl.observe(
-                obs, F.count(F.lit(1)).alias("n"),
-                F.sum("doc_len").alias("s"),
-            ).write.mode("overwrite").parquet(dl_path)
-            row = obs.get
-            add_n, add_sum = int(row["n"] or 0), int(row["s"] or 0)
-            has_dl_delta = add_n > 0
-            if not has_dl_delta:
-                import shutil as _shutil
-
-                _shutil.rmtree(dl_path, ignore_errors=True)
         n_docs_new = base_n - rem_n + add_n
         sum_dl_new = base_sum - rem_sum + add_sum
         _atomic_write_json(
@@ -309,12 +244,10 @@ def apply_updates(
                 "avgdl": (sum_dl_new / n_docs_new) if n_docs_new else 0.0,
                 "affected_buckets": affected,
                 "has_removed": removed is not None,
-                "has_dl_delta": has_dl_delta,
+                "has_dl_delta": add_n > 0,
                 "mode": mode,
             },
         )
-        if stage is not None:
-            stage.unpersist()
     params = json.load(open(params_path))
     if params.get("mode") != "delta":
         raise ValueError(
@@ -324,68 +257,31 @@ def apply_updates(
             "fresh update (resume=False)"
         )
     affected = params["affected_buckets"]
-    n_docs, avgdl = params["n_docs"], params["avgdl"]
     base_snap = read_snapshot(index_dir, params["base_version"])
-
-    skipped = [
-        b for b in affected
-        if resume and os.path.exists(f"{mdir}/bucket_{b}.json")
-    ]
-    built = [b for b in affected if b not in skipped]
-    if built:
-        # dt_{gen} holds exactly this update's postings — encode them
-        # as a new (small) layer, zero base IO
-        build_buckets_batch(
-            spark, index_dir, gen, built,
-            dt_path=dt_path,
-            avgdl=avgdl, n_docs=n_docs,
-            hot_df=base_snap["hot_df"],
-            max_salt_bits=base_snap["max_salt_bits"],
-            block_size=base_snap["block_size"],
-            store_positions=base_snap.get("store_positions", False),
-        )
-
-    done = all(
-        os.path.exists(f"{mdir}/bucket_{b}.json") for b in affected
+    # dt_{gen} holds exactly this update's postings — encode them as a
+    # new (small) layer, zero base IO
+    built, skipped, done = encode_pending(
+        spark, index_dir, gen, affected, base_snap, params["n_docs"],
+        params["avgdl"],
     )
     version = None
     if done:
         version = new_version
-        layer = {
-            "gen": gen,
-            "buckets": {
-                str(b): {
-                    "doc_terms": f"data/dt_{gen}/bucket={b}",
-                    "segments": f"data/seg_{gen}/bucket={b}",
-                }
-                for b in affected
-            },
-        }
+        layer = {"gen": gen, "buckets": segment_map(gen, affected)}
         if params["has_removed"]:
             layer["tombstones"] = f"data/removed_{gen}"
         if params.get("has_dl_delta"):
             layer["doc_lens_delta"] = f"data/dl_{gen}"
-        _atomic_write_json(
-            f"{index_dir}/snapshots/v{version}.json",
-            {
-                "n_docs": n_docs,
-                "sum_dl": params.get("sum_dl"),
-                "avgdl": avgdl,
-                "n_buckets": base_snap["n_buckets"],
-                "block_size": base_snap["block_size"],
-                "hot_df": base_snap["hot_df"],
-                "max_salt_bits": base_snap["max_salt_bits"],
-                "store_positions": base_snap.get("store_positions", False),
-                # base generation and doc_lens are inherited by path,
-                # never rewritten
-                "doc_lens": base_snap["doc_lens"],
-                "buckets": dict(base_snap["buckets"]),
-                "layers": (base_snap.get("layers") or []) + [layer],
-                "parent": params["base_version"],
-                "operation": "update_delta",
-            },
+        commit_snapshot(
+            index_dir, version, base_snap, params,
+            # base generation and doc_lens are inherited by path,
+            # never rewritten
+            doc_lens=base_snap["doc_lens"],
+            buckets=base_snap["buckets"],
+            layers=(base_snap.get("layers") or []) + [layer],
+            parent=params["base_version"],
+            operation="update_delta",
         )
-        _write_current(index_dir, version)
     if version is not None and auto_compact is not None:
         report = maybe_compact(spark, index_dir, auto_compact)
         if report is not None and report.snapshot_version is not None:
@@ -395,8 +291,8 @@ def apply_updates(
         affected_buckets=affected,
         built_buckets=built,
         skipped_buckets=skipped,
-        n_docs=n_docs,
-        avgdl=avgdl,
+        n_docs=params["n_docs"],
+        avgdl=params["avgdl"],
     )
 
 
@@ -481,13 +377,11 @@ def compact(
         )
     new_version = _next_commit_version(index_dir)
     gen = f"c{new_version}"
-    mdir = f"{index_dir}/manifests/{gen}"
-    os.makedirs(mdir, exist_ok=True)
-    params_path = f"{mdir}/params.json"
-    dt_path = f"{index_dir}/data/dt_{gen}"
+    params_path = f"{index_dir}/manifests/{gen}/params.json"
 
     phase_a_done = resume and os.path.exists(params_path)
     if not phase_a_done:
+        reset_generation(index_dir, gen)
         if rebucket:
             # re-shard: every term may move — all target buckets build
             affected_l = list(range(target_buckets))
@@ -501,29 +395,29 @@ def compact(
                 affected.update(int(b) for b in layer.get("buckets", {}))
             tomb = base.tombstones()
             if tomb is not None:
-                # buckets whose BASE postings lost docs: probe the base
-                # generation's doc_terms (layer buckets are in already)
-                base_dt = base._scan_map("doc_terms", snap["buckets"], None,
-                                         strict=True)
-                if base_dt is not None:
+                # buckets whose BASE blocks hold a tombstoned doc (layer
+                # buckets are in already): probe the blocks' doc_ids
+                blocks = base._scan_map(snap["buckets"], None, strict=True)
+                if blocks is not None:
                     affected.update(
                         r["bucket"]
-                        for r in base_dt.join(
+                        for r in blocks.select(
+                            "bucket", F.explode("doc_ids").alias("doc_id"),
+                        ).join(
                             F.broadcast(tomb.select("doc_id").distinct()),
                             "doc_id", "left_semi",
                         ).select("bucket").distinct().collect()
                     )
             affected_l = sorted(affected)
             merged = base.merged_doc_terms(affected_l)
-        # the merge: layered decode + tombstone resolve, written once
-        # as the new generation's doc_terms
+        # the merge: layered decode + tombstone resolve, staged once as
+        # the new generation's doc_terms
         (
             merged
             .repartition(max(1, len(affected_l)), "bucket")
             .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
             .partitionBy("bucket")
-            .parquet(dt_path)
+            .parquet(f"{index_dir}/data/dt_{gen}")
         )
         # consolidate doc_lens if any layer carried a dl delta
         has_dl_layers = any(
@@ -553,68 +447,33 @@ def compact(
     target_block = params.get("block_size", base_snap["block_size"])
     rebucket = params.get("rebucket", False)
 
-    skipped = [
-        b for b in affected
-        if resume and os.path.exists(f"{mdir}/bucket_{b}.json")
-    ]
-    built = [b for b in affected if b not in skipped]
-    if built:
-        build_buckets_batch(
-            spark, index_dir, gen, built,
-            dt_path=dt_path,
-            avgdl=base_snap["avgdl"], n_docs=base_snap["n_docs"],
-            hot_df=base_snap["hot_df"],
-            max_salt_bits=base_snap["max_salt_bits"],
-            block_size=target_block,
-            store_positions=base_snap.get("store_positions", False),
-        )
-
-    done = all(
-        os.path.exists(f"{mdir}/bucket_{b}.json") for b in affected
+    built, skipped, done = encode_pending(
+        spark, index_dir, gen, affected,
+        dict(base_snap, block_size=target_block),
+        base_snap["n_docs"], base_snap["avgdl"],
     )
     version = None
     if done:
         version = new_version
-        if rebucket:
-            # bucket assignment changed: nothing inherits by path
-            buckets_map = {
-                str(b): {
-                    "doc_terms": f"data/dt_{gen}/bucket={b}",
-                    "segments": f"data/seg_{gen}/bucket={b}",
-                }
-                for b in range(target_buckets)
-            }
-        else:
-            buckets_map = dict(base_snap["buckets"])
-            for b in affected:
-                buckets_map[str(b)] = {
-                    "doc_terms": f"data/dt_{gen}/bucket={b}",
-                    "segments": f"data/seg_{gen}/bucket={b}",
-                }
-        _atomic_write_json(
-            f"{index_dir}/snapshots/v{version}.json",
-            {
-                "n_docs": base_snap["n_docs"],
-                "sum_dl": base_snap.get("sum_dl"),
-                "avgdl": base_snap["avgdl"],
-                "n_buckets": target_buckets,
-                "block_size": target_block,
-                "hot_df": base_snap["hot_df"],
-                "max_salt_bits": base_snap["max_salt_bits"],
-                "store_positions": base_snap.get("store_positions", False),
-                "doc_lens": (
-                    f"data/dl_{gen}" if params.get("dl_consolidated")
-                    else base_snap["doc_lens"]
-                ),
-                "buckets": buckets_map,
-                "layers": [],
-                "parent": params["base_version"],
-                "operation": "compact",
-                "trigger": trigger,
-                "rebucketed": rebucket,
-            },
+        commit_snapshot(
+            index_dir, version, base_snap, base_snap,
+            n_buckets=target_buckets,
+            block_size=target_block,
+            doc_lens=(
+                f"data/dl_{gen}" if params.get("dl_consolidated")
+                else base_snap["doc_lens"]
+            ),
+            # re-bucketed: nothing inherits by path
+            buckets=(
+                segment_map(gen, range(target_buckets)) if rebucket
+                else {**base_snap["buckets"], **segment_map(gen, affected)}
+            ),
+            layers=[],
+            parent=params["base_version"],
+            operation="compact",
+            trigger=trigger,
+            rebucketed=rebucket,
         )
-        _write_current(index_dir, version)
     return CompactReport(
         snapshot_version=version,
         affected_buckets=list(affected),
@@ -723,10 +582,11 @@ def vacuum(index_dir: str, keep_last: int = 2) -> dict:
 
     Safe by construction: referenced paths are collected from the kept
     snapshots' bucket maps + doc_lens pointers; only data/ and
-    manifests/ entries referenced by NO kept snapshot are deleted.
+    manifests/ entries referenced by NO kept snapshot are deleted. A
+    committed generation's ``dt_<gen>`` doc_terms staging is
+    referenced by none (snapshots name only posting blocks), so it
+    goes too; an in-flight generation keeps all of its staging.
     """
-    import shutil
-
     current = _read_current(index_dir)
     log = snapshot_log(index_dir)
     versions = [s["version"] for s in log]
@@ -740,7 +600,7 @@ def vacuum(index_dir: str, keep_last: int = 2) -> dict:
             dirs.add(s["doc_lens"].split("/")[1])
             for paths in s["buckets"].values():
                 for p in paths.values():
-                    dirs.add(p.split("/")[1])  # e.g. dt_u2
+                    dirs.add(p.split("/")[1])  # e.g. seg_u2
             for layer in s.get("layers") or []:
                 gens.add(layer["gen"])
                 for key in ("tombstones", "doc_lens_delta"):

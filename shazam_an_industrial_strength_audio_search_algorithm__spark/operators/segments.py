@@ -3,15 +3,18 @@
 This is the Spark-first replacement for the reference's index
 persistence + consolidation machinery:
 
-- per-doc ``.shash`` pickle files (``Hashing.py:45,52``) →
-  ``doc_terms`` parquet partitioned by term-bucket (tokenize runs
-  once, ever);
+- per-doc ``.shash`` pickle files (``Hashing.py:45,52``) → a
+  ``doc_terms`` parquet staging partitioned by term bucket (tokenize
+  runs once per generation): phase B's input and the resume
+  checkpoint, referenced by no snapshot, so ``vacuum`` reclaims it
+  once its generation commits;
 - the single in-RAM ``LUT`` pickle (``Hashing.py:65``, loaded
-  wholesale at ``Matching.py:62-67``) → posting-block parquet
-  (one row per block: the postings as native Parquet arrays
-  ``doc_ids``/``tfs``/``dls`` [+ ``positions``] beside per-block
-  max_tf/min_dl/max_tfnorm = block-max WAND metadata), read with
-  partition pruning + predicate pushdown instead of a full RAM load;
+  wholesale at ``Matching.py:62-67``) → posting-block parquet, the
+  index's one stored form (one row per block: the postings as native
+  Parquet arrays ``doc_ids``/``tfs``/``dls`` [+ ``positions``] beside
+  per-block max_tf/min_dl/max_tfnorm = block-max WAND metadata), read
+  with partition pruning + predicate pushdown instead of a full RAM
+  load;
 - the shell split / background jobs / ``Combine.py`` merge
   (``README.md:51,58-66``, ``Combine.py:55-62``) → per-bucket build
   jobs committing atomic manifests; the combine step disappears
@@ -29,11 +32,19 @@ Layout::
 
     index_dir/
       CURRENT                     # text file: current snapshot version
-      snapshots/v<N>.json         # stats + {bucket: {doc_terms, segments}}
-      data/dt_<gen>/bucket=K/     # doc_terms parquet for generation <gen>
+      snapshots/v<N>.json         # stats + layout + {bucket: {segments}}
       data/seg_<gen>/bucket=K/    # posting blocks for generation <gen>
       data/dl_<gen>/              # doc_lens parquet
-      manifests/<gen>/bucket_K.json
+      data/dt_<gen>/bucket=K/     # phase-A doc_terms staging (no
+                                  # snapshot references it)
+      manifests/<gen>/params.json, bucket_K.json
+
+Every writer — build, ``maintenance.apply_updates`` and
+``maintenance.compact`` — runs the same protocol: phase A stages
+``dt_<gen>`` (``stage_doc_terms``; compaction stages its merged
+postings itself), phase B encodes every bucket without a manifest
+(``encode_pending``), and ``commit_snapshot`` writes the snapshot,
+then moves CURRENT.
 
 Scale design (the 100 TB story):
 
@@ -130,6 +141,12 @@ BLOCK_DDL = (
 )
 POSITIONS_DDL = "positions array<array<bigint>>"
 OBS_BLOCKSTATS_MAX = 128  # max buckets per batch counted on the write job
+MAX_SALT_BITS = 6  # a hot term splits into at most 2**6 doc_id ranges
+# what every snapshot copies from its source (build params or the
+# parent snapshot): the block layout, then the global BM25 stats
+LAYOUT_KEYS = ("n_buckets", "block_size", "hot_df", "max_salt_bits",
+               "store_positions")
+STATS_KEYS = ("n_docs", "sum_dl", "avgdl")
 
 
 # ---------------------------------------------------------------------------
@@ -233,7 +250,7 @@ def _committed_version_of_gen(index_dir: str, gen: str) -> int | None:
         except (OSError, ValueError):
             continue
         if snap.get("gen") == gen or any(
-            str(b.get("doc_terms", "")).startswith(f"data/dt_{gen}/")
+            str(b.get("segments", "")).startswith(f"data/seg_{gen}/")
             for b in snap.get("buckets", {}).values()
         ):
             return v
@@ -253,6 +270,41 @@ def read_snapshot(index_dir: str, version: int | None = None) -> dict:
     snap = json.load(open(f"{index_dir}/snapshots/v{version}.json"))
     snap["version"] = version
     return snap
+
+
+def segment_map(gen: str, buckets) -> dict:
+    """Bucket map entries naming generation ``gen``'s posting blocks —
+    the one stored form of the index a snapshot references."""
+    return {str(b): {"segments": f"data/seg_{gen}/bucket={b}"}
+            for b in buckets}
+
+
+def commit_snapshot(index_dir: str, version: int, layout: dict,
+                    stats: dict, **fields) -> None:
+    """The commit protocol of every writer: snapshot ``v<version>`` =
+    ``LAYOUT_KEYS`` copied from ``layout`` + ``STATS_KEYS`` from
+    ``stats`` + ``fields``; written first, then CURRENT moves to it —
+    never backward (a resume that re-verifies an old generation
+    rewrites that generation's own snapshot in place). Bucket maps keep
+    only the ``segments`` path: an entry inherited from a snapshot
+    that also named its doc_terms drops that path."""
+    # (store_positions is missing from snapshots that predate it)
+    snap = {k: layout.get(k, False) for k in LAYOUT_KEYS}
+    snap.update({k: stats.get(k) for k in STATS_KEYS})
+    snap.update(fields)
+
+    def blocks_only(bmap: dict) -> dict:
+        return {b: {"segments": e["segments"]} for b, e in bmap.items()}
+
+    snap["buckets"] = blocks_only(snap["buckets"])
+    if "layers" in snap:
+        snap["layers"] = [dict(layer, buckets=blocks_only(layer["buckets"]))
+                          for layer in snap["layers"]]
+    os.makedirs(f"{index_dir}/snapshots", exist_ok=True)
+    _atomic_write_json(f"{index_dir}/snapshots/v{version}.json", snap)
+    if not os.path.exists(f"{index_dir}/CURRENT") \
+            or version >= _read_current(index_dir):
+        _write_current(index_dir, version)
 
 
 def encode_blocks(postings: DataFrame, avgdl: float, block_size: int,
@@ -477,6 +529,150 @@ def build_buckets_batch(
         )
 
 
+def reset_generation(index_dir: str, gen: str) -> None:
+    """Clear a generation before its phase A (re)runs: a manifest
+    left by an earlier attempt would let phase B skip a bucket whose
+    input changed, and a bucket that is empty this time would keep the
+    old attempt's staged postings."""
+    for rel in (f"data/dt_{gen}", f"data/seg_{gen}", f"manifests/{gen}"):
+        shutil.rmtree(f"{index_dir}/{rel}", ignore_errors=True)
+    os.makedirs(f"{index_dir}/manifests/{gen}")
+
+
+def stage_doc_terms(index_dir: str, gen: str, n_buckets: int,
+                    store_positions: bool, corpus: DataFrame | None,
+                    doc_terms: DataFrame | None, id_col: str = "doc_id",
+                    text_col: str = "content",
+                    timings: dict | None = None) -> tuple[int, int]:
+    """Phase A of a build or update generation: write ``dt_<gen>``
+    (doc_terms partitioned by term bucket — phase B's input and the
+    resume checkpoint; no snapshot references it, so ``vacuum``
+    reclaims it once the generation commits) and ``dl_<gen>``
+    (doc_id, doc_len). Returns (n, Σdoc_len) of the written lens,
+    observed on the write job.
+
+    The postings are ``doc_terms`` (pre-tokenized: doc_id, term,
+    tf[, positions], doc_len) when given, else ONE tokenize pass over
+    ``corpus``, persisted so it feeds both writes ('tokenize once,
+    ever'). ``timings`` receives the two writes' wall seconds."""
+    import time
+
+    from pyspark import StorageLevel
+    from pyspark.sql import Observation
+
+    from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.index_build import (
+        doc_term_stage,
+        explode_doc_terms,
+    )
+    from shazam_an_industrial_strength_audio_search_algorithm__spark.session import (
+        spread_input,
+    )
+
+    timings = {} if timings is None else timings
+    t0 = time.monotonic()
+    stage = None
+    if doc_terms is not None:
+        if store_positions and "positions" not in doc_terms.columns:
+            raise ValueError("the index stores positions but the "
+                             "pre-tokenized postings carry none")
+        dt = doc_terms.select("doc_id", "term", "tf", *(
+            ["positions"] if store_positions else []), "doc_len")
+        # doc_len is functionally determined by doc_id, and a doc's
+        # postings are co-located, so the distinct collapses map-side
+        # to ~one row per doc — a doc-count-sized shuffle (empty docs
+        # hold no postings, so doc_len > 0 throughout)
+        lens = doc_terms.select("doc_id", "doc_len").distinct()
+    else:
+        # spread a narrow input first: the tokenize UDF is the phase's
+        # CPU kernel, and a single-row-group corpus file would
+        # otherwise run it on one task (no-op at scale)
+        stage = doc_term_stage(
+            spread_input(corpus), id_col, text_col,
+            with_positions=store_positions,
+        ).persist(StorageLevel.MEMORY_AND_DISK)
+        dt = explode_doc_terms(stage, with_positions=store_positions)
+        lens = stage.select("doc_id", "doc_len").filter(F.col("doc_len") > 0)
+    (
+        dt.withColumn("bucket", bucket_col(F.col("term"), n_buckets))
+        .write.mode("overwrite")
+        .partitionBy("bucket")
+        .parquet(f"{index_dir}/data/dt_{gen}")
+    )
+    timings["phase_a_doc_terms"] = time.monotonic() - t0
+    t0 = time.monotonic()
+    # n/Σdoc_len ride the write job as an Observation — no read-back
+    # aggregation over the just-written parquet
+    obs = Observation(f"dl_{gen}")
+    (
+        lens.observe(obs, F.count(F.lit(1)).alias("n"),
+                     F.sum("doc_len").alias("s"))
+        .write.mode("overwrite")
+        .parquet(f"{index_dir}/data/dl_{gen}")
+    )
+    if stage is not None:
+        stage.unpersist()
+    row = obs.get
+    timings["phase_a_doc_lens"] = time.monotonic() - t0
+    return int(row["n"] or 0), int(row["s"] or 0)
+
+
+def encode_pending(spark: SparkSession, index_dir: str, gen: str,
+                   buckets, layout: dict, n_docs: int, avgdl: float,
+                   todo=None) -> tuple[list[int], list[int], bool]:
+    """Phase B of every writer: encode each bucket of ``todo``
+    (default: ``buckets``) that has no manifest yet from the staged
+    ``dt_<gen>``, all in one ``build_buckets_batch`` job under
+    ``layout``'s block size, salting and positions. A bucket with a
+    manifest is skipped — phase A clears the generation's manifests,
+    so only a resumed run finds any. Returns (built, skipped, done),
+    done when every bucket of ``buckets`` has its manifest."""
+    def committed(b: int) -> bool:
+        return os.path.exists(f"{index_dir}/manifests/{gen}/bucket_{b}.json")
+
+    todo = list(buckets if todo is None else todo)
+    skipped = [b for b in todo if committed(b)]
+    built = [b for b in todo if b not in skipped]
+    build_buckets_batch(
+        spark, index_dir, gen, built, f"{index_dir}/data/dt_{gen}",
+        avgdl, n_docs, layout["hot_df"], layout["max_salt_bits"],
+        layout["block_size"], layout.get("store_positions", False),
+    )
+    return built, skipped, all(committed(b) for b in buckets)
+
+
+def _drop_stale_manifests(spark: SparkSession, index_dir: str, gen: str,
+                          todo: list[int]) -> None:
+    """Resume lineage check: delete the manifest of every bucket whose
+    staged (term, df) digest no longer matches the ``input_digest`` it
+    was committed with, so phase B rebuilds it."""
+    mdir = f"{index_dir}/manifests/{gen}"
+    present = [b for b in todo if os.path.exists(f"{mdir}/bucket_{b}.json")]
+    if not present:
+        return
+    dt_path = f"{index_dir}/data/dt_{gen}"
+    if not os.path.isdir(dt_path):
+        raise FileNotFoundError(
+            f"verify_inputs needs generation {gen}'s doc_terms staging "
+            f"({dt_path}), which vacuum reclaims once the generation "
+            "commits — its inputs can no longer be verified; rebuild "
+            "with resume=False"
+        )
+    cur = {
+        r["bucket"]: int(r["d"])
+        for r in spark.read.parquet(dt_path)
+        .filter(F.col("bucket").isin(present))
+        .groupBy("bucket", "term")
+        .agg(F.count(F.lit(1)).alias("df"))
+        .groupBy("bucket")
+        .agg(F.bit_xor(F.xxhash64("term", "df")).alias("d"))
+        .collect()
+    }
+    for b in present:
+        m = json.load(open(f"{mdir}/bucket_{b}.json"))
+        if int(m.get("input_digest", 0) or 0) != cur.get(b, 0):
+            os.remove(f"{mdir}/bucket_{b}.json")
+
+
 @dataclass
 class BuildReport:
     built_buckets: list[int]
@@ -494,7 +690,6 @@ def build_segment_index(
     index_dir: str,
     n_buckets: int | None = None,
     hot_df: int = 2048,
-    max_salt_bits: int = 6,
     block_size: int | None = None,
     resume: bool = False,
     id_col: str = "doc_id",
@@ -513,10 +708,11 @@ def build_segment_index(
     of re-running the tokenizer — the 'tokenize once, ever' contract
     applied ACROSS index layouts, not just within one build.
 
-    Phase A (once): tokenize → doc_terms parquet partitioned by term
-    bucket, + doc_lens + build-params json. Phase B (per bucket,
-    resumable): see ``build_bucket_segments``. Snapshot v1 + CURRENT
-    commit only when every bucket's manifest exists.
+    Phase A (once, ``stage_doc_terms``): tokenize → doc_terms staging
+    partitioned by term bucket, + doc_lens + build-params json.
+    Phase B (per bucket, resumable): ``encode_pending``. Snapshot v1 +
+    CURRENT commit (``commit_snapshot``) only when every bucket's
+    manifest exists.
 
     ``buckets`` limits phase B to a subset (tests use it to simulate
     an interrupted build; a real deployment passes None).
@@ -524,13 +720,14 @@ def build_segment_index(
     ``verify_inputs=True`` hardens resume: instead of trusting a
     committed manifest blindly, each skipped bucket's ``input_digest``
     (order-independent xxhash64 digest of its (term, df) multiset,
-    written at commit time) is recomputed from the checkpointed
-    doc_terms and mismatching buckets are rebuilt. Costs one
-    counts-only aggregation over the skipped buckets' postings — far
-    cheaper than re-encoding, and the reference's resume
-    (``Matching.py:46-57,96``) has no integrity check at all.
-    Manifests written before this field existed fail verification and
-    rebuild (conservative).
+    written at commit time) is recomputed from the doc_terms staging
+    and mismatching buckets are rebuilt. Costs one counts-only
+    aggregation over the skipped buckets' postings — far cheaper than
+    re-encoding, and the reference's resume (``Matching.py:46-57,96``)
+    has no integrity check at all. Manifests written before this field
+    existed fail verification and rebuild (conservative). Once
+    ``vacuum`` has reclaimed a committed generation's staging there is
+    nothing to verify against: the call raises FileNotFoundError.
 
     ATOMIC over a LIVE index (since round 4): a fresh (resume=False)
     build into an ``index_dir`` that already holds a committed
@@ -543,7 +740,7 @@ def build_segment_index(
     over the committed initial build); resuming a fully committed
     build is an idempotent no-op that never rolls CURRENT back.
     """
-    import time as _time
+    import time
 
     if corpus is None and doc_terms_df is None:
         raise ValueError("build_segment_index needs a corpus or a "
@@ -563,119 +760,29 @@ def build_segment_index(
     if corpus is not None and id_col == "doc_id" \
             and "doc_id" not in corpus.columns:
         corpus = with_doc_id(corpus)
-    os.makedirs(f"{index_dir}/manifests/{gen}", exist_ok=True)
-    os.makedirs(f"{index_dir}/snapshots", exist_ok=True)
 
     params_path = f"{index_dir}/manifests/{gen}/params.json"
-    dt_path = f"{index_dir}/data/dt_{gen}"
-    dl_path = f"{index_dir}/data/dl_{gen}"
     phase_a_done = resume and os.path.exists(params_path)
-    if not phase_a_done and (n_buckets is None or block_size is None):
-        # data-aware defaults (verdict r4 item 2): one cheap count of
-        # the input sizes the layout so per-bucket posting volume
-        # stays ~constant as corpora grow — nothing to hand-tune at
-        # 100 TB. Explicit knobs and resumed builds skip the count.
-        n_est = (
-            corpus.count() if corpus is not None
-            else doc_terms_df.select("doc_id").distinct().count()
-        )
-        if n_buckets is None:
-            n_buckets = auto_n_buckets(n_est)
-        if block_size is None:
-            block_size = auto_block_size(n_est)
     if not phase_a_done:
-        import shutil as _shutil
-
-        # fresh (non-resume) build into a dir holding a previous
-        # attempt: clear this generation's outputs first. The seg
-        # write uses DYNAMIC partition overwrite (only touched buckets
-        # rewrite), so a bucket that is empty in the new corpus would
-        # otherwise keep the OLD corpus's partition and manifest —
-        # committing stale postings into the new snapshot.
-        _shutil.rmtree(f"{index_dir}/data/seg_{gen}", ignore_errors=True)
-        _shutil.rmtree(f"{index_dir}/manifests/{gen}", ignore_errors=True)
-        os.makedirs(f"{index_dir}/manifests/{gen}", exist_ok=True)
-
-        from pyspark import StorageLevel
-
-        from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.index_build import (
-            doc_term_stage,
-            explode_doc_terms,
-        )
-
-        _t0 = _time.monotonic()
-        stage = None
-        if doc_terms_df is not None:
-            # pre-tokenized postings supplied (e.g. the v1 index's
-            # cached doc_terms over the same corpus): write them
-            # directly — no tokenizer pass at all for this build
-            if store_positions and "positions" not in doc_terms_df.columns:
-                raise ValueError(
-                    "store_positions=True but doc_terms_df carries no "
-                    "positions column"
-                )
-            pcols = ["doc_id", "term", "tf"]
-            if store_positions:
-                pcols.append("positions")
-            pcols.append("doc_len")
-            dt = doc_terms_df.select(*pcols).withColumn(
-                "bucket", bucket_col(F.col("term"), n_buckets)
+        if n_buckets is None or block_size is None:
+            # data-aware defaults (verdict r4 item 2): one cheap count
+            # of the input sizes the layout so per-bucket posting
+            # volume stays ~constant as corpora grow — nothing to
+            # hand-tune at 100 TB. Explicit knobs and resumed builds
+            # skip the count.
+            n_est = (
+                corpus.count() if corpus is not None
+                else doc_terms_df.select("doc_id").distinct().count()
             )
-        else:
-            # spread a narrow input first: the tokenize UDF below is
-            # the phase's CPU kernel, and a single-row-group corpus
-            # file would otherwise run it on one task (no-op at scale)
-            from shazam_an_industrial_strength_audio_search_algorithm__spark.session import (
-                spread_input,
-            )
-
-            corpus = spread_input(corpus)
-            # ONE tokenize pass: the persisted stage feeds both the
-            # doc_terms explode AND the doc_lens projection —
-            # 'tokenize once, ever', no second corpus pass, no
-            # postings shuffle
-            stage = doc_term_stage(
-                corpus, id_col, text_col, with_positions=store_positions
-            ).persist(StorageLevel.MEMORY_AND_DISK)
-            dt = explode_doc_terms(stage, with_positions=store_positions)\
-                .withColumn("bucket", bucket_col(F.col("term"), n_buckets))
-        (
-            dt.write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(dt_path)
+            if n_buckets is None:
+                n_buckets = auto_n_buckets(n_est)
+            if block_size is None:
+                block_size = auto_block_size(n_est)
+        reset_generation(index_dir, gen)
+        n_, sum_ = stage_doc_terms(
+            index_dir, gen, n_buckets, store_positions, corpus,
+            doc_terms_df, id_col, text_col, timings,
         )
-        timings["phase_a_doc_terms"] = _time.monotonic() - _t0
-        _t0 = _time.monotonic()
-        # n_docs/sum_dl ride the write job as an Observation — the
-        # previous read-back aggregation over the just-written parquet
-        # was a whole extra job for two scalars the writer already
-        # streams past (guide §1/§2: don't re-scan for metadata)
-        from pyspark.sql import Observation
-
-        if stage is not None:
-            dl_src = stage.select("doc_id", "doc_len").filter(
-                F.col("doc_len") > 0
-            )
-        else:
-            # doc_len is functionally determined by doc_id, and a
-            # doc's postings are co-located, so the distinct collapses
-            # map-side to ~one row per doc — a doc-count-sized shuffle
-            # (empty docs hold no postings, so doc_len > 0 throughout)
-            dl_src = doc_terms_df.select("doc_id", "doc_len").distinct()
-        obs = Observation("dl_stats")
-        (
-            dl_src
-            .observe(obs, F.count(F.lit(1)).alias("n"),
-                     F.sum("doc_len").alias("sum_dl"))
-            .write.mode("overwrite")
-            .parquet(dl_path)
-        )
-        if stage is not None:
-            stage.unpersist()
-        row = obs.get
-        timings["phase_a_doc_lens"] = _time.monotonic() - _t0
-        n_ = int(row["n"] or 0)
-        sum_ = int(row["sum_dl"] or 0)
         _atomic_write_json(
             params_path,
             {
@@ -689,7 +796,7 @@ def build_segment_index(
                 "n_buckets": n_buckets,
                 "block_size": block_size,
                 "hot_df": hot_df,
-                "max_salt_bits": max_salt_bits,
+                "max_salt_bits": MAX_SALT_BITS,
                 "store_positions": store_positions,
                 "format_version": 2,
             },
@@ -698,99 +805,41 @@ def build_segment_index(
     n_buckets, avgdl = params["n_buckets"], params["avgdl"]
 
     todo = list(range(n_buckets)) if buckets is None else list(buckets)
-    skipped = [
-        b for b in todo
-        if resume and os.path.exists(f"{index_dir}/manifests/{gen}/bucket_{b}.json")
-    ]
-    if skipped and verify_inputs:
-        cur = {
-            r["bucket"]: int(r["d"])
-            for r in spark.read.parquet(dt_path)
-            .filter(F.col("bucket").isin(skipped))
-            .groupBy("bucket", "term")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .groupBy("bucket")
-            .agg(F.bit_xor(F.xxhash64("term", "df")).alias("d"))
-            .collect()
-        }
-        stale = []
-        for b in skipped:
-            m = json.load(open(f"{index_dir}/manifests/{gen}/bucket_{b}.json"))
-            if int(m.get("input_digest", 0) or 0) != cur.get(b, 0):
-                stale.append(b)
-        skipped = [b for b in skipped if b not in stale]
-    built = [b for b in todo if b not in skipped]
-    _t0 = _time.monotonic()
-    build_buckets_batch(
-        spark, index_dir, gen, built, dt_path, avgdl, params["n_docs"],
-        params["hot_df"], params["max_salt_bits"], params["block_size"],
-        store_positions=params.get("store_positions", False),
+    if verify_inputs:
+        _drop_stale_manifests(spark, index_dir, gen, todo)
+    t0 = time.monotonic()
+    built, skipped, done = encode_pending(
+        spark, index_dir, gen, range(n_buckets), params, params["n_docs"],
+        avgdl, todo,
     )
-    timings["phase_b_segments"] = _time.monotonic() - _t0
+    timings["phase_b_segments"] = time.monotonic() - t0
 
-    done = all(
-        os.path.exists(f"{index_dir}/manifests/{gen}/bucket_{b}.json")
-        for b in range(n_buckets)
-    )
     version = None
     if done:
-        already_current = None
-        if os.path.exists(f"{index_dir}/CURRENT"):
-            already_current = _read_current(index_dir)
-        committed = _committed_version_of_gen(index_dir, gen)
-        # idempotent re-run guard: a resume re-run that rebuilt
-        # NOTHING over an already-committed generation must not
-        # re-commit — rewriting CURRENT backward would silently roll
-        # back updates committed after the build. A run that actually
-        # (re)built buckets commits normally.
-        if not built and committed is not None \
-                and already_current is not None \
-                and already_current >= committed:
-            return BuildReport(
-                built_buckets=built,
-                skipped_buckets=skipped,
-                phase_a_skipped=phase_a_done,
-                n_docs=params["n_docs"],
-                avgdl=avgdl,
-                snapshot_version=committed,
-                timings=timings,
-            )
+        already_current = (
+            _read_current(index_dir)
+            if os.path.exists(f"{index_dir}/CURRENT") else None
+        )
         # a committed generation re-verified in place (verify_inputs
         # rebuilds) keeps its version; a fresh generation commits past
         # every existing snapshot AND the current pointer — so a
         # rebuild racing a concurrent update can never clobber it
-        version = committed if committed is not None \
-            else _next_commit_version(index_dir)
-        _atomic_write_json(
-            f"{index_dir}/snapshots/v{version}.json",
-            {
-                "n_docs": params["n_docs"],
-                "sum_dl": params.get("sum_dl"),
-                "avgdl": avgdl,
-                "n_buckets": n_buckets,
-                "block_size": params["block_size"],
-                "hot_df": params["hot_df"],
-                "max_salt_bits": params["max_salt_bits"],
-                "store_positions": params.get("store_positions", False),
-                "doc_lens": f"data/dl_{gen}",
-                "buckets": {
-                    str(b): {
-                        "doc_terms": f"data/dt_{gen}/bucket={b}",
-                        "segments": f"data/seg_{gen}/bucket={b}",
-                    }
-                    for b in range(n_buckets)
-                },
-                "gen": gen,
-                "parent": (
-                    already_current if gen != "init" else None
-                ),
-                "operation": "initial_build" if gen == "init" else "rebuild",
-            },
-        )
-        # snapshot first, pointer second (the atomic commit protocol);
-        # never move CURRENT backward
-        if already_current is None or version >= already_current:
-            _write_current(index_dir, version)
+        version = _committed_version_of_gen(index_dir, gen)
+        # idempotent re-run guard: a resume re-run that rebuilt
+        # NOTHING over a generation CURRENT already covers must not
+        # re-commit — that would rewrite a committed snapshot's lineage
+        if built or version is None or already_current is None \
+                or already_current < version:
+            if version is None:
+                version = _next_commit_version(index_dir)
+            commit_snapshot(
+                index_dir, version, params, params,
+                doc_lens=f"data/dl_{gen}",
+                buckets=segment_map(gen, range(n_buckets)),
+                gen=gen,
+                parent=already_current if gen != "init" else None,
+                operation="initial_build" if gen == "init" else "rebuild",
+            )
     return BuildReport(
         built_buckets=built,
         skipped_buckets=skipped,
@@ -858,10 +907,9 @@ class SegmentIndex:
         )
         return self.spark.createDataFrame([], ", ".join(cols + ["bucket int"]))
 
-    def _scan_map(self, kind: str, bmap: dict,
-                  buckets: list[int] | None,
+    def _scan_map(self, bmap: dict, buckets: list[int] | None,
                   strict: bool = False) -> DataFrame | None:
-        """One generation map's bucket paths → a single DataFrame (or
+        """One bucket map's block paths → a single DataFrame (or
         None if nothing exists). ``basePath`` parquet scans keep
         ``bucket`` a REAL partition column (``bucket=K`` dirs) —
         statically path-pruned when a bucket list is given, and
@@ -882,7 +930,7 @@ class SegmentIndex:
                     f"snapshot v{self.version} bucket map is missing "
                     f"bucket {b} — corrupt or truncated snapshot"
                 )
-            rel = bmap.get(str(b), {}).get(kind)
+            rel = bmap.get(str(b), {}).get("segments")
             if rel is None:
                 continue
             path = f"{self.index_dir}/{rel}"
@@ -906,16 +954,14 @@ class SegmentIndex:
         layer i = i+1) so downstream tombstone resolution knows which
         rows a delete supersedes; non-layered reads keep the historical
         schema (no ``gen_seq``) untouched."""
-        base = self._scan_map("segments", self.snapshot["buckets"], buckets,
-                              strict=True)
+        base = self._scan_map(self.snapshot["buckets"], buckets, strict=True)
         if not self.has_deltas:
             return base if base is not None else self._empty()
         parts = []
         if base is not None:
             parts.append(base.withColumn("gen_seq", F.lit(0)))
         for i, layer in enumerate(self.layers):
-            piece = self._scan_map("segments", layer.get("buckets", {}),
-                                   buckets)
+            piece = self._scan_map(layer.get("buckets", {}), buckets)
             if piece is not None:
                 parts.append(piece.withColumn("gen_seq", F.lit(i + 1)))
         if not parts:

@@ -138,6 +138,7 @@ def _bucket_expr(v_col, planes: np.ndarray):
 
 DEFAULT_CELLS = 16
 DEFAULT_PROBE = 4
+FILES_PER_WRITE_TASK = 96  # bucket files one IVF writer task creates
 
 
 def _id_hash(col):
@@ -540,11 +541,9 @@ def lsh_persist(emb: DataFrame, out_dir: str,
     # the full shuffle width.
     n_files = sum(f[2] for f in factors)
     total_rows = sum(f[1] for f in factors)
-    files_per_task = int(os.environ.get(
-        "SPARK_GRAFT_FILES_PER_WRITE_TASK", "96"))
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
     n_tasks = max(1, min(n_part, max(
-        math.ceil(n_files / files_per_task),
+        math.ceil(n_files / FILES_PER_WRITE_TASK),
         math.ceil(total_rows / target_rows_per_file),
     )))
     salted = (

@@ -71,10 +71,10 @@ def test_exact_dup_groups_bounds_degenerate_membership(spark):
 
 
 def test_last_wins_strict_default_is_deterministic(spark):
-    """strict=True (the default): unique keys pass through untouched;
-    duplicate keys without ingest_seq raise instead of silently
-    picking a partition-layout-dependent winner; with ingest_seq the
-    true last writer wins."""
+    """Unique keys pass through untouched; duplicate keys without
+    ingest_seq raise instead of silently picking a
+    partition-layout-dependent winner; with ingest_seq the true last
+    writer wins."""
     from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.index_build import (
         dedup_last_wins,
     )
@@ -90,8 +90,6 @@ def test_last_wins_strict_default_is_deterministic(spark):
     )
     with pytest.raises(ValueError, match="ingest_seq"):
         dedup_last_wins(dup).collect()
-    # layout-dependent fallback is opt-in only
-    assert dedup_last_wins(dup, strict=False).count() == 1
 
     seq = spark.createDataFrame(
         [("r", "a", "c1", "old", 1), ("r", "a", "c1", "new", 2)],
@@ -300,16 +298,20 @@ def test_near_dup_clusters_chain_and_star(spark):
                    20: 20, 21: 20}
 
 
-def test_near_dup_clusters_random_graphs_match_union_find(spark):
-    """Randomized pin: min-label propagation over arbitrary pair
-    graphs must equal a union-find ground truth (components labeled
-    by min member)."""
+def test_near_dup_clusters_random_graphs_match_union_find(spark,
+                                                         monkeypatch):
+    """Randomized pin: over arbitrary pair graphs, both components
+    paths — the driver-side union-find (edge set under LOCAL_CC_CAP)
+    and the distributed min-label propagation (cap patched to 0) —
+    must equal a union-find ground truth (components labeled by min
+    member)."""
     import random
 
-    from shazam_an_industrial_strength_audio_search_algorithm__spark.operators.dedup import (
-        near_dup_clusters,
+    from shazam_an_industrial_strength_audio_search_algorithm__spark.operators import (
+        dedup,
     )
 
+    caps = (dedup.LOCAL_CC_CAP, 0)
     rng = random.Random(1234)
     for trial in range(4):
         n = rng.randint(5, 40)
@@ -338,8 +340,10 @@ def test_near_dup_clusters_random_graphs_match_union_find(spark):
         pairs = spark.createDataFrame(
             sorted(edges), "doc_a long, doc_b long"
         )
-        got = {
-            r["doc_id"]: r["cluster_id"]
-            for r in near_dup_clusters(pairs).collect()
-        }
-        assert got == want, f"trial {trial}: {got} != {want}"
+        for cap in caps:
+            monkeypatch.setattr(dedup, "LOCAL_CC_CAP", cap)
+            got = {
+                r["doc_id"]: r["cluster_id"]
+                for r in dedup.near_dup_clusters(pairs).collect()
+            }
+            assert got == want, f"trial {trial}, cap {cap}: {got} != {want}"

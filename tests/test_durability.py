@@ -97,6 +97,25 @@ def test_rerun_resume_build_keeps_current_pointer(spark, corpus_df, tmp_path):
     drop_index(d)
 
 
+def test_verify_inputs_after_vacuum_raises(spark, corpus_df, tmp_path):
+    """vacuum reclaims a committed generation's doc_terms staging, the
+    only thing verify_inputs can check a bucket against: a verifying
+    resume must then fail loudly, never skip the check, and leave
+    CURRENT where it was."""
+    d = str(tmp_path / "idx")
+    corpus = with_doc_id(corpus_df)
+    build_segment_index(spark, corpus, d, n_buckets=4, hot_df=8,
+                        block_size=16)
+    vacuum(d, keep_last=1)
+    assert not os.path.exists(f"{d}/data/dt_init")
+    with pytest.raises(FileNotFoundError, match="vacuum"):
+        build_segment_index(spark, corpus, d, n_buckets=4, hot_df=8,
+                            block_size=16, resume=True, verify_inputs=True)
+    assert _read_current(d) == 1
+    assert _topk_rows(spark, d, "tok0001")
+    drop_index(d)
+
+
 def test_fresh_rebuild_is_atomic_generation_swap(spark, corpus_df,
                                                  tmp_path):
     """Rebuild-over-live since round 4: a fresh build over a committed

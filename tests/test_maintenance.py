@@ -146,7 +146,7 @@ def test_update_touches_only_affected_buckets(spark, state, index_dir):
         gen = snap["layers"][-1]["gen"]
         for paths in snap["layers"][-1]["buckets"].values():
             assert {p.split("/")[1] for p in paths.values()} == {
-                f"dt_{gen}", f"seg_{gen}"}
+                f"seg_{gen}"}
 
 
 def test_explicit_ids_update_matches_oracle(spark, corpus_pdf,
